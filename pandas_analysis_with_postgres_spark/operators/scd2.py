@@ -74,16 +74,21 @@ def scd2_apply(
             if c != key and c not in SCD2_COLS and c in history.columns
         ]
 
-    # Duplicate staged keys (several change events per key in one CDC
-    # delta) would open multiple current versions and fan out the
-    # close-out join, violating invariant I1 — keep only the latest
-    # event per key, latest-change-ts first with the business columns as
-    # a deterministic tiebreak.
+    # The version timestamp: the change timestamp, falling back to the
+    # create timestamp when it is NULL (the reference's :214 fallback).
+    # It orders the dedup below, closes superseded rows (M3) and opens
+    # their successors (M4) — one expression, so "closed.effective_to_date
+    # == successor.effective_from_date" holds by construction.
     effective_ts = (
         F.coalesce(F.col(change_ts_col), F.col(create_ts_col))
         if create_ts_col
         else F.col(change_ts_col)
     )
+    # Duplicate staged keys (several change events per key in one CDC
+    # delta) would open multiple current versions and fan out the
+    # close-out join, violating invariant I1 — keep only the latest
+    # event per key, latest-change-ts first with the business columns as
+    # a deterministic tiebreak.
     staged = keep_first_dedup(
         staged,
         key,
@@ -97,16 +102,7 @@ def scd2_apply(
     changed = changed_rows(staged, current, key, compare_cols)
 
     # M3 — close out superseded current rows (dmCustomerProc.py:210-216).
-    # The close date falls back to the create date when the change
-    # timestamp is NULL (the reference's :214 fallback) — this keeps the
-    # invariant "closed.effective_to_date == successor.effective_from_date"
-    # since M4 opens at the same COALESCE.
-    close_ts = (
-        F.coalesce(F.col(change_ts_col), F.col(create_ts_col))
-        if create_ts_col
-        else F.col(change_ts_col)
-    )
-    close_keys = changed.select(F.col(key).alias("__ck"), close_ts.alias("__close_ts"))
+    close_keys = changed.select(F.col(key).alias("__ck"), effective_ts.alias("__close_ts"))
     closing = current.join(close_keys, current[key] == F.col("__ck"), "inner")
     closed = closing.withColumns(
         {
@@ -118,14 +114,9 @@ def scd2_apply(
     untouched_current = current.join(close_keys, current[key] == F.col("__ck"), "left_anti")
 
     # M4 — open the new versions (dmCustomerProc.py:218-232).
-    eff_from = (
-        F.coalesce(F.col(change_ts_col), F.col(create_ts_col))
-        if create_ts_col
-        else F.col(change_ts_col)
-    )
     opened = changed.withColumns(
         {
-            "effective_from_date": eff_from,
+            "effective_from_date": effective_ts,
             "effective_to_date": F.lit(None).cast("timestamp"),
             "is_current_record": F.lit(1),
             "sys_effective_from_date": now,

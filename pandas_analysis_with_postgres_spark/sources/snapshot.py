@@ -929,7 +929,10 @@ def _footer_stats(part_dir: Path, cols: list[str]) -> tuple[dict, int]:
     Entry shape: ``[min, max, null_count]`` when every chunk reports
     a null count (parquet-mr and parquet-cpp both write it), else the
     legacy ``[min, max]`` — readers treat a 2-element entry as "null
-    count unknown" and refuse null-sensitive proofs (range COUNT).
+    count unknown" and refuse null-sensitive proofs (range COUNT). A
+    column that is NULL in every row (every chunk all-null, none
+    lacking statistics) records ``[None, None, null_count]``: no
+    extremes to skip on, but a proof that nothing satisfies a range.
 
     The same pass also records PER-FILE statistics under the reserved
     ``FILES_KEY`` (file-grain data skipping — see the constant's
@@ -1009,6 +1012,10 @@ def _footer_stats(part_dir: Path, cols: list[str]) -> tuple[dict, int]:
             )
             for c in fmins
         }
+        fentry.update(
+            {c: [None, None, k] for c, k in fnulls.items()
+             if c not in fmins and c not in fbad}
+        )
         fentry[N_ROWS_KEY] = md.num_rows
         file_stats[f.name] = fentry
     out = {
@@ -1019,6 +1026,10 @@ def _footer_stats(part_dir: Path, cols: list[str]) -> tuple[dict, int]:
         )
         for c in mins
     }
+    out.update(
+        {c: [None, None, k] for c, k in nulls.items()
+         if c not in mins and c not in bad}
+    )
     # manifest-size hygiene: a pathologically fragmented directory
     # (thousands of files — compaction debt) would bloat the JSON
     # manifest with per-file entries nobody should rely on; partition
@@ -1492,14 +1503,8 @@ def read_snapshot(
         if sj:
             from pyspark.sql.types import StructType
 
-            def _chain(name: str) -> str:
-                for old, new in renames:
-                    if name == old:
-                        name = new
-                return name
-
             for f in StructType.fromJson(json.loads(sj)).fields:
-                logical_name = _chain(f.name)
+                logical_name = _chain(renames, f.name)
                 if logical_name in dropped:
                     continue
                 if logical_name not in out.columns:
@@ -2597,6 +2602,41 @@ def _compute_sums(
 #: widen the bucket, don't bloat every future manifest).
 _HIST_KEY_RE = re.compile(r"^(?P<col>[A-Za-z_]\w*)::hist:(?P<width>[1-9]\d*)$")
 MAX_HIST_BUCKETS = 4096
+
+
+def _is_sketch_key(name: str) -> bool:
+    """True for a reserved sketch stats key (``::hll`` / ``::sum`` /
+    ``::hist:<width>``) — the one guard every answerer applies before
+    treating a name as a data column."""
+    return bool(
+        name.endswith(HLL_SUFFIX)
+        or name.endswith(SUM_SUFFIX)
+        or _HIST_KEY_RE.match(name)
+    )
+
+
+def _chain(renames: list, name: str) -> str:
+    """The LOGICAL name of a physical column under the schema-evolution
+    rename chain ``renames`` (``[[old, new], …]`` in commit order): old
+    commits' stats and footers carry pre-rename names, and old names
+    are never reused, so one forward pass resolves any of them."""
+    for old, new in renames:
+        if name == old:
+            name = new
+    return name
+
+
+def _logical_stats(entry: dict, renames: list) -> dict:
+    """One partition's (or file's) stats entry keyed by LOGICAL name:
+    data columns follow the rename chain, sketch keys the chain of
+    their base column (``old::sum`` → ``new::sum``); the reserved
+    row-count and per-file keys are dropped."""
+    out = {}
+    for k, v in entry.items():
+        if k not in (N_ROWS_KEY, FILES_KEY):
+            base, sep, rest = k.partition("::")
+            out[_chain(renames, base) + sep + rest] = v
+    return out
 
 
 def _compute_hists(
@@ -5188,15 +5228,8 @@ def manifest_aggregate(
     meta = man.get("schema") or {}
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     want = list(columns or [])
-    if any(c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-           or _HIST_KEY_RE.match(c) for c in want):
+    if any(_is_sketch_key(c) for c in want):
         raise ValueError(
             "sketch entries (::hll / ::hist:) are not min/max columns "
             "— use manifest_approx_distinct / manifest_quantile"
@@ -5227,7 +5260,7 @@ def manifest_aggregate(
     # (old commits' footers carry pre-rename physical names)
     aliases = set(want)
     for old, _new in renames:
-        if _chain(old) in aliases:
+        if _chain(renames, old) in aliases:
             aliases.add(old)
     stats = man.get("stats") or {}
     parts = man.get("partitions") or {}
@@ -5252,8 +5285,7 @@ def manifest_aggregate(
     for pname, rel in parts.items():
         entry = stats.get(pname) or {}
         # logical view of this partition's recorded stats
-        logical = {_chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)}
+        logical = _logical_stats(entry, renames)
         need = [c for c in want if c not in logical]
         if entry.get(N_ROWS_KEY) is None or need:
             # pre-upgrade commit or un-tracked column: harvest the
@@ -5261,7 +5293,7 @@ def manifest_aggregate(
             # files are pre-rename for old commits — map via _chain)
             harvested, hrows = _footer_stats(Path(path) / rel, sorted(aliases))
             logical.update({
-                _chain(k): v for k, v in harvested.items()
+                _chain(renames, k): v for k, v in harvested.items()
                 if k != FILES_KEY
             })
             n_rows += (
@@ -5285,6 +5317,8 @@ def manifest_aggregate(
                 missing.setdefault(c, []).append(pname)
                 continue
             lo, hi = rng[0], rng[1]  # entry may carry [min, max, nulls]
+            if lo is None:
+                continue  # all-NULL partition: skipped like SQL MIN/MAX
             mins[c] = lo if c not in mins else min(mins[c], lo)
             maxs[c] = hi if c not in maxs else max(maxs[c], hi)
     if missing:
@@ -5459,12 +5493,6 @@ def manifest_approx_distinct(
         )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     # eq restriction filters one component level; IN restriction = the
     # members' registers merged by max — the same arithmetic as the
     # global merge over a smaller set; an absent member simply
@@ -5485,14 +5513,10 @@ def manifest_approx_distinct(
     stats = man.get("stats") or {}
 
     def _regs_of(pname: str) -> "list | None":
-        entry = stats.get(pname) or {}
         # the sketch key follows the rename chain of its BASE column
-        for k, v in entry.items():
-            if k.endswith(HLL_SUFFIX) and _chain(
-                k[: -len(HLL_SUFFIX)]
-            ) == column:
-                return v
-        return None
+        return _logical_stats(stats.get(pname) or {}, renames).get(
+            f"{column}{HLL_SUFFIX}"
+        )
 
     def _estimate(regs: list) -> float:
         cap = SK.HLL_W_BITS + 1
@@ -5600,12 +5624,6 @@ def manifest_quantile(
         )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     # eq restriction filters one component level; IN restriction: the
     # members' bucket counts summed — the same merge as global, over
     # fewer partitions; absent members add 0
@@ -5628,7 +5646,7 @@ def manifest_quantile(
         entry = stats.get(pname) or {}
         for k, v in entry.items():
             hm = _HIST_KEY_RE.match(k)
-            if hm is not None and _chain(hm.group("col")) == column:
+            if hm is not None and _chain(renames, hm.group("col")) == column:
                 return v, int(hm.group("width"))
         return None
 
@@ -5735,8 +5753,7 @@ def manifest_group_stats(
             "the grouped partition column's per-group min/max is the "
             "group value itself — select the column, not MIN/MAX of it"
         )
-    if any(c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-           or _HIST_KEY_RE.match(c) for c in columns):
+    if any(_is_sketch_key(c) for c in columns):
         raise ValueError(
             "sketch entries (::hll / ::hist:) are not min/max columns "
             "— use manifest_approx_distinct / manifest_quantile "
@@ -5744,15 +5761,9 @@ def manifest_group_stats(
         )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     aliases = set(columns)
     for old, _new in renames:
-        if _chain(old) in aliases:
+        if _chain(renames, old) in aliases:
             aliases.add(old)
     # a collection where_partition value restricts to the member SET
     # (the IN shape) in the same one-manifest-read pass as a scalar
@@ -5773,10 +5784,7 @@ def manifest_group_stats(
     grouped: dict = {}
     for pname in sorted(parts):
         entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
+        logical = _logical_stats(entry, renames)
         n = entry.get(N_ROWS_KEY)
         need = [c for c in columns if c not in logical]
         if n is None or need:
@@ -5784,7 +5792,7 @@ def manifest_group_stats(
                 Path(path) / parts[pname], sorted(aliases)
             )
             logical.update({
-                _chain(k): v for k, v in harvested.items()
+                _chain(renames, k): v for k, v in harvested.items()
                 if k != FILES_KEY
             })
             if n is None:
@@ -5845,106 +5853,37 @@ def manifest_range_count(
     ``hi_strict`` make the corresponding bound exclusive. The
     PARTITION column is always answerable: each directory holds ONE
     value (in-or-out, partial overlap impossible; the NULL partition
-    contributes 0 like SQL)."""
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
+    contributes 0 like SQL). Classification is
+    :func:`_classify_range`, the hybrid provers' own rule."""
+    if _is_sketch_key(column):
         raise ValueError(
             "sketch entries (::hll / ::hist:) are not range columns "
             "— use manifest_approx_distinct / manifest_quantile"
         )
     man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    spec_cols = [c for c, _t in _spec_meta(meta)]
+    spec_cols = [c for c, _t in _spec_meta(man.get("schema") or {})]
     if column in spec_cols and _mixed_spec(man):
         # old-spec directory names are not values of the current
-        # partition spec; the stats branch below (non-spec column)
-        # stays valid — per-partition stats are spec-independent
+        # partition spec (per-partition stats of a non-spec column are
+        # spec-independent and stay provable)
         return None
-    if where_partition is not None:
+    try:
         # partition-equality restriction composes with the range proof:
         # only the member partitions' containment matters (the
         # conjunctive "WHERE pcol = v AND col <range>" dashboard shape)
-        if (
-            any(w not in spec_cols for w, _v in _wp_conjuncts(where_partition))
-            or _mixed_spec(man)
-        ):
-            return None
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    part_rows = _restrict_parts(
-        _partition_rows(man, path), meta, where_partition=where_partition
-    )
-    if column in spec_cols:
-        cidx, _cc, ctype = _partition_selector(meta, column)
-        total = 0
-        for pname, n in part_rows.items():
-            is_null, v = _partition_value(pname.split("/")[cidx], ctype)
-            if is_null:
-                continue  # NULL satisfies no range predicate
-            try:
-                if _in_lo(v) and _in_hi(v):
-                    total += n
-            except TypeError:
-                return None  # incomparable literal vs partition type
-        return total
-
-    renames = (meta.get("renames") or [])
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
+        targets = _eq_targets(man, path, where_partition)
+    except ValueError:
+        return None  # non-spec restriction column / mixed-spec table
     total = 0
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(column)
-        if rng is None:
-            return None  # no recorded stats: containment unprovable
-        cmin, cmax = rng[0], rng[1]
-        try:
-            inside = _in_lo(cmin) and _in_hi(cmax)
-            # fully outside: every non-null value fails one bound
-            outside_lo = lo is not None and (
-                cmax < lo or (lo_strict and cmax <= lo)
-            )
-            outside_hi = hi is not None and (
-                cmin > hi or (hi_strict and cmin >= hi)
-            )
-        except TypeError:
-            return None  # incomparable bound type
-        if outside_lo or outside_hi:
-            # non-null values all excluded; nulls excluded by SQL —
-            # contributes 0 (tombstoned rows were a subset: still 0)
-            continue
-        if pname in tomb_parts:
-            # merge-on-read tombstones: the deleted rows' positions in
-            # the range are unknown, so a contributing partition's
-            # count is unprovable — refuse; compaction restores it
+    for _p, n, verdict, nulls, _lg in _classify_range(
+        man, path, column, lo, hi, lo_strict, hi_strict, targets
+    ):
+        if verdict == "scan" or (verdict == "inside" and nulls is None):
+            # partial overlap, no stats, tombstones, incomparable
+            # literal, or a legacy entry's unknown null count
             return None
-        nulls = rng[2] if len(rng) > 2 else None
-        if inside:
-            if nulls is None:
-                return None  # legacy entry: null count unknown
-            total += n - nulls
-        elif nulls is not None and nulls == n:
-            continue  # all-NULL partition: nothing satisfies a range
-        else:
-            return None  # partial overlap: not provable from stats
+        if verdict == "inside":
+            total += n - int(nulls)
     return total
 
 
@@ -5976,8 +5915,7 @@ def manifest_column_count(
     the live rows outside the NULL partition. ``where_partition`` /
     ``where_partition_in`` restrict to member partitions (absent
     members contribute 0, SQL semantics)."""
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
+    if _is_sketch_key(column):
         raise ValueError(
             "sketch entries (::hll / ::hist:) are not countable columns"
         )
@@ -6035,12 +5973,6 @@ def manifest_column_count(
         return sum(_nn(pname, n) for pname, n in part_rows.items())
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
 
@@ -6052,10 +5984,7 @@ def manifest_column_count(
                 "unknown) — compact first, or scan"
             )
         entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
+        logical = _logical_stats(entry, renames)
         rng = logical.get(column)
         if rng is None or len(rng) < 3 or rng[2] is None:
             raise ValueError(
@@ -6137,12 +6066,6 @@ def manifest_column_sum(
             )
     renames = meta.get("renames") or []
 
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
     part_rows = _restrict_parts(
@@ -6159,13 +6082,10 @@ def manifest_column_sum(
                 "merge-on-read tombstones (deleted rows' values "
                 "unknown) — compact first, or scan"
             )
-        entry = stats.get(pname) or {}
         # the sum key follows the rename chain of its BASE column
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX) and _chain(
-                k[: -len(SUM_SUFFIX)]
-            ) == column:
-                return (v[0], int(v[1]))
+        v = _logical_stats(stats.get(pname) or {}, renames).get(key)
+        if v is not None:
+            return (v[0], int(v[1]))
         raise ValueError(
             f"no '{column}{SUM_SUFFIX}' entry recorded for {pname!r} — "
             "add it to stats_cols and rewrite, or scan the data"
@@ -6251,138 +6171,21 @@ def range_count_pruned(
     shape for "how many rows in this key range".
 
     Bounds are manifest-rendering values (`_stat_json` ordering).
-    Returns ``{"count", "meta_partitions", "scanned_partitions"}``.
+    Returns ``{"count", "meta_partitions", "scanned_partitions",
+    "scanned_files", "total_files"}`` (count None under
+    ``explain_only``). One-item :func:`range_multi_pruned`.
     """
-    from pyspark.sql import functions as F
-
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
-        raise ValueError(
-            "sketch entries (::hll / ::sum / ::hist:) are not range "
-            "columns — pass the data column itself"
-        )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    # conjunctive shape: the pcol equality prunes the universe the
-    # range classification runs over — exact, it IS the partition index
-    targets = _eq_targets(man, path, pcol, where_partition)
-    meta_total = 0
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        if (comp := _spec_component(meta, man, column)) is not None:
-            # one value per directory: in-or-out, never boundary —
-            # any spec COMPONENT's level proves it (multi-column too)
-            is_null, v = _partition_value(
-                pname.split("/")[comp[0]], comp[1]
-            )
-            try:
-                if not is_null and _in_lo(v) and _in_hi(v):
-                    meta_total += n
-                    meta_parts.add(pname)
-                continue
-            except TypeError:
-                scan_parts.add(pname)  # incomparable literal: scan it
-                continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(column)
-        # classify FIRST (mirrors range_sum_pruned): [min,max] is a
-        # pre-delete SUPERSET, so a proven-OUTSIDE partition counts
-        # zero even when tombstoned — no data pages needed for it.
-        if rng is not None:
-            try:
-                outside = (
-                    lo is not None
-                    and (rng[1] < lo or (lo_strict and rng[1] <= lo))
-                ) or (
-                    hi is not None
-                    and (rng[0] > hi or (hi_strict and rng[0] >= hi))
-                )
-            except TypeError:
-                outside = False  # incomparable literal: no proof
-            if outside:
-                continue  # proven zero (nulls excluded by SQL anyway)
-        if rng is None or pname in tomb_parts:
-            scan_parts.add(pname)  # unprovable: scan exactly this one
-            continue
-        cmin, cmax = rng[0], rng[1]
-        try:
-            inside = _in_lo(cmin) and _in_hi(cmax)
-        except TypeError:
-            scan_parts.add(pname)
-            continue
-        nulls = rng[2] if len(rng) > 2 else None
-        if inside and nulls is not None:
-            meta_total += n - int(nulls)
-            meta_parts.add(pname)
-        elif nulls is not None and nulls == n:
-            continue  # all-NULL partition: proven zero
-        else:
-            scan_parts.add(pname)
-    scanned = 0
-    if scan_parts and not explain_only:
-        c = F.col(column)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        scanned = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={column: (lo, hi)},
-            )
-            .filter(cond)
-            .count()
-        )
-    # file-grain accounting, mirroring exactly what the boundary scan
-    # above read (zero data pages itself)
-    files_scanned, files_total = _window_file_counts(
-        stats, scan_parts, column, lo, hi
+    out = range_multi_pruned(
+        spark, path, column, [("count", None)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version, where_partition=where_partition,
+        explain_only=explain_only,
     )
-    if explain_only:
-        return {
-            "count": None,  # the boundary was not scanned: no value
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": files_scanned,
-            "total_files": files_total,
-        }
     return {
-        "count": int(meta_total + scanned),
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-        "scanned_files": files_scanned,
-        "total_files": files_total,
+        "count": None if explain_only else out["values"][0],
+        **_partition_counts(out, True),
     }
+
 
 
 def read_metadata_table(
@@ -6542,28 +6345,18 @@ def null_count_pruned(
     skips the scan (count None) for the EXPLAIN surface."""
     from pyspark.sql import functions as F
 
-    if (column.endswith(HLL_SUFFIX) or column.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(column)):
+    if _is_sketch_key(column):
         raise ValueError(
             "sketch entries (::hll / ::sum / ::hist:) are not data "
             "columns — pass the column itself"
         )
     man = read_manifest(path, version)
     meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    ptype = meta.get("partition_type") or "string"
     renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
     stats = man.get("stats") or {}
     tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
     part_rows = _partition_rows(man, path)
-    targets = _eq_targets(man, path, pcol, where_partition)
+    targets = _eq_targets(man, path, where_partition)
     meta_total = 0
     meta_parts: set = set()
     scan_parts: set = set()
@@ -6583,10 +6376,7 @@ def null_count_pruned(
             meta_parts.add(pname)
             continue
         entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
+        logical = _logical_stats(entry, renames)
         rng = logical.get(column)
         if (
             pname in tomb_parts
@@ -6624,7 +6414,7 @@ def null_count_pruned(
                 continue
             files_total += len(fstats)
             for fs in fstats.values():
-                rng = {_chain(k): v for k, v in fs.items()}.get(column)
+                rng = _logical_stats(fs, renames).get(column)
                 fn = fs.get(N_ROWS_KEY)
                 if rng is not None and len(rng) > 2 and rng[2] is not None:
                     zero = (
@@ -6646,6 +6436,599 @@ def null_count_pruned(
         "count": int(meta_total + scanned),
         "meta_partitions": len(meta_parts),
         "scanned_partitions": len(scan_parts),
+    }
+
+
+def _eq_targets(man, path, where_partition):
+    """Shared partition-VALUE restriction for the hybrid provers:
+    None (unrestricted), the singleton member set for an equality
+    ``(pcol, value)``, or the member set for an IN-list ``(pcol,
+    [v1, v2, …])`` — partitions outside the set contribute nothing,
+    exactly ``pcol IN (…) AND <range>`` semantics (an absent member
+    restricts to an empty directory set). Raises on a non-partition
+    column or a mixed-spec table (directory names are not values of
+    the current partition column there)."""
+    if where_partition is None:
+        return None
+    meta = man.get("schema") or {}
+    # raises on a non-spec column; matches the restricted column's OWN
+    # directory level, so eq/IN on ANY component of a multi-column
+    # spec restricts exactly (absent members restrict to nothing); a
+    # LIST of conjuncts restricts per component (day = x AND source = y)
+    for wcol, _wv in _wp_conjuncts(where_partition):
+        _partition_selector(meta, wcol)
+    if _mixed_spec(man):
+        raise ValueError(
+            "partition-VALUE restriction is unprovable while "
+            f"{path} holds old-spec directories — compact_snapshot to "
+            "migrate, or scan"
+        )
+    return set(
+        _restrict_parts(
+            man.get("partitions") or {},
+            meta,
+            where_partition=where_partition,
+        )
+    )
+
+
+def _classify_range(
+    man, path, range_col, lo, hi, lo_strict, hi_strict, targets
+):
+    """THE partition-vs-range rule every range prover shares. Yields
+    ``(pname, n_live, verdict, nulls, logical)`` for each partition of
+    ``man`` with live rows (only members of ``targets`` when it is not
+    None), where ``verdict`` is one of:
+
+    - ``"outside"`` — no row passes ``range_col <range>``: every
+      non-null value fails a bound, the spec component's directory
+      value is outside or NULL, or the column is all NULL (a recorded
+      ``[None, None, nulls]`` entry — nothing satisfies a range).
+      [min, max] bound the pre-delete rows, a superset of the live
+      ones, so outside proofs survive merge-on-read tombstones;
+    - ``"inside"`` — every non-null value passes, so ``n_live -
+      nulls`` rows pass. ``nulls`` is the range column's recorded null
+      count: 0 for a spec component (one value per directory — any
+      component of a multi-column spec), None for a legacy 2-element
+      entry. ``logical`` is the partition's logical stats entry
+      (:func:`_logical_stats`) for per-aggregate proofs, or None when
+      tombstones make its values stale (a spec-proven partition stays
+      inside: its live count is exact; a stats-proven one scans);
+    - ``"scan"`` — unprovable: boundary overlap, no stats for the
+      column, tombstones, or a literal incomparable with the recorded
+      type.
+
+    Bounds are manifest-rendering values (`_stat_json` ordering);
+    ``lo_strict``/``hi_strict`` make the corresponding bound
+    exclusive."""
+    meta = man.get("schema") or {}
+    renames = meta.get("renames") or []
+    stats = man.get("stats") or {}
+    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
+    comp = _spec_component(meta, man, range_col)
+
+    def _in_lo(v) -> bool:
+        return lo is None or (v > lo if lo_strict else v >= lo)
+
+    def _in_hi(v) -> bool:
+        return hi is None or (v < hi if hi_strict else v <= hi)
+
+    for pname, n in _partition_rows(man, path).items():
+        if n == 0 or (targets is not None and pname not in targets):
+            continue
+        entry = _logical_stats(stats.get(pname) or {}, renames)
+        tomb = pname in tomb_parts
+        nulls = None
+        try:
+            if comp is not None:
+                is_null, v = _partition_value(
+                    pname.split("/")[comp[0]], comp[1]
+                )
+                inside = not is_null and _in_lo(v) and _in_hi(v)
+                verdict, nulls = ("inside", 0) if inside else ("outside", None)
+            elif (rng := entry.get(range_col)) is None:
+                verdict = "scan"  # no recorded stats: unprovable
+            elif rng[0] is None and rng[1] is None:
+                verdict = "outside"  # all-NULL: nothing passes a range
+            elif not (_in_lo(rng[1]) and _in_hi(rng[0])):
+                verdict = "outside"  # every non-null value fails a bound
+            elif not tomb and _in_lo(rng[0]) and _in_hi(rng[1]):
+                verdict = "inside"
+                nulls = rng[2] if len(rng) > 2 else None
+            else:
+                verdict = "scan"  # boundary overlap, or tombstoned
+        except TypeError:
+            verdict = "scan"  # incomparable literal vs recorded type
+        yield pname, n, verdict, nulls, None if tomb else entry
+
+
+def _range_cond(col: str, lo, hi, lo_strict: bool, hi_strict: bool):
+    """The ``col <range>`` predicate a hybrid boundary scan applies
+    (and pushes to the parquet reader)."""
+    from pyspark.sql import functions as F
+
+    c = F.col(col)
+    cond = F.lit(True)
+    if lo is not None:
+        cond = cond & (c > lo if lo_strict else c >= lo)
+    if hi is not None:
+        cond = cond & (c < hi if hi_strict else c <= hi)
+    return cond
+
+
+def _boundary_scan(
+    spark, path, version, scan_parts, range_col, lo, hi, lo_strict, hi_strict
+) -> DataFrame:
+    """The one data read of a hybrid range prover: ONLY the unproven
+    partitions, file-pruned to the window, range predicate applied."""
+    return read_snapshot(
+        spark, path, version,
+        partition_filter=lambda p: p in scan_parts,
+        column_ranges={range_col: (lo, hi)},
+    ).filter(_range_cond(range_col, lo, hi, lo_strict, hi_strict))
+
+
+_RANGE_KINDS = ("count", "sum", "avg", "min", "max")
+
+
+def _check_range_items(range_col: str, items: list) -> None:
+    """Validate a hybrid item list ``[(kind, agg_col)]`` up front: known
+    kinds only, and data columns — never sketch entries — for the
+    range column and every aggregated column."""
+    kinds = {k for k, _ in items}
+    if not kinds <= set(_RANGE_KINDS):
+        raise ValueError(
+            f"unknown aggregate kind(s) {sorted(kinds - set(_RANGE_KINDS))}"
+        )
+    for c in [range_col] + [c for k, c in items if k != "count"]:
+        if c is None or _is_sketch_key(c):
+            raise ValueError(
+                "pass data columns, not sketch entries (::hll / ::sum "
+                "/ ::hist:)"
+            )
+
+
+def _item_values(items, pname, n, range_col, nulls, logical, comps):
+    """Per-item metadata answers for one INSIDE partition, or None when
+    any item is unprovable there — the partition then scans for EVERY
+    item (the one boundary scan computes all aggregates together, so
+    provability differences cost no extra I/O). Gates: count needs the
+    range column's recorded null count; sum/avg need the ``agg_col::
+    sum`` entry plus zero range nulls (a NULL range value fails the
+    predicate but lives in the sum entry); min/max need the agg
+    column's [min, max] (from the directory name for a spec component,
+    ``comps``) plus zero range nulls unless the range column IS the
+    aggregated column. Value items need tombstone-free stats
+    (``logical`` not None)."""
+    vals = []
+    for kind, c in items:
+        if kind == "count":
+            if nulls is None:
+                return None
+            vals.append(n - int(nulls))
+            continue
+        if logical is None:
+            return None
+        if kind in ("sum", "avg"):
+            pair = logical.get(f"{c}{SUM_SUFFIX}")
+            if pair is None or nulls != 0:
+                return None
+            sv, nn = pair[0], int(pair[1])
+            vals.append((None if sv is None else int(sv), nn))
+            continue
+        if nulls != 0 and c != range_col:
+            return None
+        if comps.get(c) is not None:
+            is_null, v = _partition_value(
+                pname.split("/")[comps[c][0]], comps[c][1]
+            )
+            rng = None if is_null else (v, v)
+        else:
+            rng = logical.get(c)
+        if rng is None:
+            return None
+        vals.append(rng[0] if kind == "min" else rng[1])
+    return vals
+
+
+def _scan_aggs(items: list) -> list:
+    """Boundary-scan aggregate columns serving every item at once."""
+    from pyspark.sql import functions as F
+
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in sorted({c for k, c in items if k in ("sum", "avg")}):
+        aggs.append(
+            F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__s_{c}")
+        )
+        aggs.append(F.count(F.col(c)).alias(f"__c_{c}"))
+    for c in sorted({c for k, c in items if k in ("min", "max")}):
+        aggs.append(F.min(c).alias(f"__lo_{c}"))
+        aggs.append(F.max(c).alias(f"__hi_{c}"))
+    return aggs
+
+
+def _row_values(row, items: list) -> list:
+    """One :func:`_scan_aggs` result row → per-item values, in the
+    shapes :func:`_item_values` produces."""
+    vals = []
+    for kind, c in items:
+        if kind == "count":
+            vals.append(int(row["__n"]))
+        elif kind in ("sum", "avg"):
+            s = row[f"__s_{c}"]
+            vals.append(
+                (None if s is None else int(s), int(row[f"__c_{c}"]))
+            )
+        elif kind == "min":
+            vals.append(_exact_extreme(row[f"__lo_{c}"]))
+        else:
+            vals.append(_exact_extreme(row[f"__hi_{c}"]))
+    return vals
+
+
+def _combine_item(kind: str, vals: list):
+    """Merge one item's per-source values (metadata partitions plus
+    the boundary scan) with SQL aggregate-over-nothing semantics: counts
+    add; sums add with None only when every source summed nothing;
+    extremes skip None."""
+    if kind == "count":
+        return int(sum(vals))
+    if kind in ("sum", "avg"):
+        sums = [s for s, _n in vals if s is not None]
+        return (sum(sums) if sums else None, sum(nn for _s, nn in vals))
+    present = [v for v in vals if v is not None]
+    if not present:
+        return None
+    return min(present) if kind == "min" else max(present)
+
+
+def _partition_counts(out: dict, files: bool) -> dict:
+    """A hybrid result's partition (and, with ``files``, file-grain)
+    accounting keys — the tail every single-aggregate adapter
+    returns."""
+    keys = ("meta_partitions", "scanned_partitions")
+    if files:
+        keys += ("scanned_files", "total_files")
+    return {k: out[k] for k in keys}
+
+
+def _exact_extreme(v):
+    """Normalize a SCANNED extreme for comparison with manifest
+    renderings: scanned values are EXACT, not truncatable footer stats
+    — only re-render temporals to the manifest's ISO ordering; refuse
+    types whose rendering cannot order."""
+    import datetime as _dt
+
+    if v is None:
+        return None
+    if isinstance(v, bool):
+        raise ValueError(
+            "MIN/MAX over a boolean column is not served — "
+            "prune-useless either way"
+        )
+    if isinstance(v, (_dt.date, _dt.datetime)):
+        return v.isoformat()
+    return v
+
+
+def range_multi_pruned(
+    spark: SparkSession,
+    path: str,
+    range_col: str,
+    items: "list[tuple[str, str | None]]",
+    *,
+    lo=None,
+    hi=None,
+    lo_strict: bool = False,
+    hi_strict: bool = False,
+    version: "int | str | None" = None,
+    where_partition: "tuple[str, object] | None" = None,
+    explain_only: bool = False,
+) -> dict:
+    """MULTI-AGGREGATE hybrid range pass — ``SELECT COUNT(*), SUM(x),
+    AVG(x), MIN(y), MAX(y) … WHERE range_col <range>`` answered with
+    ONE partition classification and ONE boundary scan shared by every
+    aggregate (the dashboard statement shape; running a prover per
+    aggregate would pay N boundary scans over the same directories).
+    ``items`` is ``[(kind, agg_col)]`` with kind one of
+    ``count/sum/avg/min/max`` (``agg_col`` ignored for count). The
+    single-aggregate provers (:func:`range_count_pruned`,
+    :func:`range_sum_pruned`, :func:`range_minmax_pruned`) are this
+    pass with one item.
+
+    Classification is :func:`_classify_range`; a partition proven
+    inside contributes from metadata only when EVERY item is provable
+    there (:func:`_item_values` — count needs the range column's
+    recorded null count, sum/avg need the ``agg_col::sum`` entry plus
+    zero range nulls, min/max need the agg column's [min, max] plus
+    zero range nulls unless the range column IS the aggregated
+    column). Any unprovable item sends the partition to the scan set
+    for ALL items — the boundary scan computes every aggregate in a
+    single job, so provability differences cost no extra I/O. Exact by
+    construction; proven-outside partitions contribute nothing
+    regardless of tombstones ([min, max] bounds a pre-delete superset).
+
+    Returns ``{"values": [per-item], "meta_partitions",
+    "scanned_partitions", "scanned_files", "total_files"}`` where a
+    count item yields an int, sum/avg yield ``(total | None,
+    n_nonnull)`` (the caller divides for AVG — same float semantics as
+    the scan), and min/max yield a manifest-rendered value or None.
+    ``explain_only`` skips the scan (values None)."""
+    _check_range_items(range_col, items)
+    man = read_manifest(path, version)
+    meta = man.get("schema") or {}
+    comps = {
+        c: _spec_component(meta, man, c)
+        for k, c in items
+        if k in ("min", "max")
+    }
+    meta_vals: list = []  # per metadata partition: per-item values
+    scan_parts: set = set()
+    for pname, n, verdict, nulls, logical in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict,
+        _eq_targets(man, path, where_partition),
+    ):
+        if verdict == "outside":
+            continue  # proven zero contribution for every item
+        vals = (
+            _item_values(items, pname, n, range_col, nulls, logical, comps)
+            if verdict == "inside"
+            else None
+        )
+        if vals is None:
+            scan_parts.add(pname)
+        else:
+            meta_vals.append(vals)
+    fs, ft = _window_file_counts(
+        man.get("stats") or {}, scan_parts, range_col, lo, hi
+    )
+    out = {
+        "values": None,
+        "meta_partitions": len(meta_vals),
+        "scanned_partitions": len(scan_parts),
+        "scanned_files": fs,
+        "total_files": ft,
+    }
+    if explain_only:
+        return out
+    if scan_parts:
+        row = (
+            _boundary_scan(
+                spark, path, version, scan_parts,
+                range_col, lo, hi, lo_strict, hi_strict,
+            )
+            .agg(*_scan_aggs(items))
+            .collect()[0]
+        )
+        meta_vals.append(_row_values(row, items))
+    out["values"] = [
+        _combine_item(kind, [vals[i] for vals in meta_vals])
+        for i, (kind, _c) in enumerate(items)
+    ]
+    return out
+
+
+def range_group_multi(
+    spark: SparkSession,
+    path: str,
+    range_col: str,
+    items: "list[tuple[str, str | None]]",
+    *,
+    lo=None,
+    hi=None,
+    lo_strict: bool = False,
+    hi_strict: bool = False,
+    version: "int | str | None" = None,
+    where_partition: "tuple[str, object] | None" = None,
+    explain_only: bool = False,
+) -> dict:
+    """Grouped MULTI-AGGREGATE hybrid range pass: ``SELECT pcol,
+    COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE range_col
+    <range> GROUP BY pcol`` — :func:`range_multi_pruned` per group.
+    Group ≡ partition, so each group classifies independently
+    (:func:`_classify_range`): a partition proven fully inside serves
+    EVERY item from its metadata (same per-item gates as
+    range_multi_pruned; a known range-column null count is always
+    required, because it decides whether the group exists), a
+    proven-outside or empty-after-nulls partition produces NO group
+    (SQL: empty groups don't exist), and every partition with ANY
+    unprovable item scans — all of them in ONE grouped job over just
+    those directories, every aggregate computed together. The
+    per-ingest-day dashboard panel at 100 TB: metadata rows for the
+    interior days, one grouped scan for the two edge days.
+
+    Returns ``{"groups": [(value, [per-item values]), …] sorted by
+    partition name, "meta_partitions", "scanned_partitions",
+    "scanned_files", "total_files"}`` with the same per-item value
+    shapes as range_multi_pruned (count → int; sum/avg → ``(total |
+    None, n_nonnull)``; min/max → rendered value or None);
+    ``explain_only`` skips the scan (groups None)."""
+    _check_range_items(range_col, items)
+    man = read_manifest(path, version)
+    meta = man.get("schema") or {}
+    pcol = meta.get("partition_col")
+    if not pcol:
+        raise ValueError(
+            f"snapshot table at {path!r} is unpartitioned — no "
+            "partition column to group by"
+        )
+    if _mixed_spec(man):
+        raise ValueError(
+            f"GROUP BY {pcol!r} is unprovable while {path} holds "
+            "old-spec directories — compact_snapshot to migrate"
+        )
+    comps = {
+        c: _spec_component(meta, man, c)
+        for k, c in items
+        if k in ("min", "max")
+    }
+    per_group: dict = {}  # pname -> [per-item values]
+    meta_parts: set = set()
+    scan_parts: set = set()
+    for pname, n, verdict, nulls, logical in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict,
+        _eq_targets(man, path, where_partition),
+    ):
+        if verdict == "outside":
+            continue  # no group
+        vals = (
+            _item_values(items, pname, n, range_col, nulls, logical, comps)
+            if verdict == "inside" and nulls is not None
+            else None
+        )
+        if vals is None:
+            scan_parts.add(pname)
+        elif n - int(nulls) > 0:  # else every row fails: no group
+            meta_parts.add(pname)
+            per_group[pname] = vals
+    fs, ft = _window_file_counts(
+        man.get("stats") or {}, scan_parts, range_col, lo, hi
+    )
+    out = {
+        "groups": None,
+        "meta_partitions": len(meta_parts),
+        "scanned_partitions": len(scan_parts),
+        "scanned_files": fs,
+        "total_files": ft,
+    }
+    if explain_only:
+        return out
+    if scan_parts:
+        rows = _collect_partition_groups(
+            _boundary_scan(
+                spark, path, version, scan_parts,
+                range_col, lo, hi, lo_strict, hi_strict,
+            )
+            .groupBy(pcol)
+            .agg(*_scan_aggs(items)),
+            pcol,
+            what="range_group_multi",
+        )
+        for r in rows:
+            per_group[_hive_part_name(pcol, r[0])] = _row_values(r, items)
+    ptype = meta.get("partition_type") or "string"
+    out["groups"] = [
+        (_partition_value(pname, ptype)[1], per_group[pname])
+        for pname in sorted(per_group)
+    ]
+    return out
+
+
+def range_sum_pruned(
+    spark: SparkSession,
+    path: str,
+    range_col: str,
+    sum_col: str,
+    *,
+    lo=None,
+    hi=None,
+    lo_strict: bool = False,
+    hi_strict: bool = False,
+    version: "int | str | None" = None,
+    where_partition: "tuple[str, object] | None" = None,
+    explain_only: bool = False,
+) -> dict:
+    """HYBRID ``SUM(sum_col) WHERE range_col <range>`` — the z65 idea
+    generalized from counting to summing: partitions the manifest
+    proves fully inside the range contribute their recorded
+    ``[sum, n_nonnull]`` entry (``stats_cols=["sum_col::sum"]``),
+    proven-outside contribute nothing, ONLY the remainder scans.
+
+    A metadata contribution additionally requires the partition's
+    range-column NULL COUNT to be zero (recorded in its stats entry):
+    rows with a NULL range column fail the SQL predicate but ARE
+    inside the partition's sum entry, so any nulls push the partition
+    to the scan set — provability, not approximation. Returns
+    ``{"sum" (None when nothing matched), "n_nonnull",
+    "meta_partitions", "scanned_partitions"}`` — n_nonnull is the
+    AVG denominator (predicate-passing rows with a non-null sum_col);
+    ``explain_only`` returns None values plus ``scanned_files`` /
+    ``total_files``. One-item :func:`range_multi_pruned`.
+    """
+    out = range_multi_pruned(
+        spark, path, range_col, [("sum", sum_col)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version, where_partition=where_partition,
+        explain_only=explain_only,
+    )
+    total, n = (None, None) if explain_only else out["values"][0]
+    return {
+        "sum": total,
+        "n_nonnull": n,
+        **_partition_counts(out, explain_only),
+    }
+
+
+def range_minmax_pruned(
+    spark: SparkSession,
+    path: str,
+    range_col: str,
+    agg_col: str,
+    *,
+    lo=None,
+    hi=None,
+    lo_strict: bool = False,
+    hi_strict: bool = False,
+    version: "int | str | None" = None,
+    where_partition: "tuple[str, object] | None" = None,
+    explain_only: bool = False,
+) -> dict:
+    """HYBRID ``MIN(agg_col)/MAX(agg_col) WHERE range_col <range>`` —
+    the last member of the z65/z72 family: partitions proven fully
+    inside the range contribute their recorded ``[min, max]`` stats
+    for ``agg_col`` (SQL MIN/MAX skip NULLs exactly as parquet
+    statistics do), proven-outside contribute nothing, ONLY the
+    boundary scans. A metadata contribution requires the member's
+    range-column null count to be zero — UNLESS the range column IS
+    the aggregated column (its NULL rows fail the predicate and are
+    absent from the stats anyway). Values compare in manifest
+    rendering (`_stat_json`): numbers natively, dates as ISO strings.
+    Returns ``{"min", "max", "meta_partitions",
+    "scanned_partitions"}`` (None extremes when nothing matched;
+    ``explain_only`` adds ``scanned_files`` / ``total_files``).
+    One-item-pair :func:`range_multi_pruned`."""
+    out = range_multi_pruned(
+        spark, path, range_col, [("min", agg_col), ("max", agg_col)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version, where_partition=where_partition,
+        explain_only=explain_only,
+    )
+    mn, mx = out["values"] or (None, None)
+    return {"min": mn, "max": mx, **_partition_counts(out, explain_only)}
+
+
+def range_group_counts(
+    spark: SparkSession,
+    path: str,
+    range_col: str,
+    *,
+    lo=None,
+    hi=None,
+    lo_strict: bool = False,
+    hi_strict: bool = False,
+    version: "int | str | None" = None,
+) -> dict:
+    """Grouped HYBRID range COUNT: ``SELECT pcol, COUNT(*) WHERE
+    range_col <range> GROUP BY pcol`` with the z65 discipline per
+    group — a partition proven fully inside contributes its exact
+    live count from metadata, proven-outside contributes NO group
+    (SQL: empty groups don't exist), and only boundary / stat-less /
+    tombstoned partitions scan, in ONE grouped job over just those
+    directories. The per-ingest-day "rows in this key range" panel at
+    100 TB: metadata for the interior days, data pages only for the
+    two edge days.
+
+    Returns ``{"groups": [(value, n), …] sorted by partition name
+    (zero-count groups omitted), "meta_partitions",
+    "scanned_partitions"}``. One-item :func:`range_group_multi`."""
+    out = range_group_multi(
+        spark, path, range_col, [("count", None)],
+        lo=lo, hi=hi, lo_strict=lo_strict, hi_strict=hi_strict,
+        version=version,
+    )
+    return {
+        "groups": [(v, vals[0]) for v, vals in out["groups"]],
+        **_partition_counts(out, False),
     }
 
 
@@ -6682,8 +7065,7 @@ def range_null_count_pruned(
     from pyspark.sql import functions as F
 
     for c in (range_col, null_col):
-        if (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                or _HIST_KEY_RE.match(c)):
+        if _is_sketch_key(c):
             raise ValueError(
                 "sketch entries (::hll / ::sum / ::hist:) are not data "
                 "columns — pass the column itself"
@@ -6705,74 +7087,22 @@ def range_null_count_pruned(
             version=version, explain_only=explain_only,
         )
     man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
     meta_total = 0
     meta_parts: set = set()
     scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        rng = logical.get(range_col)
-        # classify FIRST: [min,max] is a pre-delete SUPERSET, so a
-        # proven-OUTSIDE partition counts zero even when tombstoned
-        if rng is not None:
-            try:
-                outside = (
-                    lo is not None
-                    and (rng[1] < lo or (lo_strict and rng[1] <= lo))
-                ) or (
-                    hi is not None
-                    and (rng[0] > hi or (hi_strict and rng[0] >= hi))
-                )
-            except TypeError:
-                outside = False  # incomparable literal: no proof
-            if outside:
-                continue  # proven zero (range NULLs excluded by SQL too)
-        nrng = logical.get(null_col)
+    for pname, n, verdict, rnulls, logical in _classify_range(
+        man, path, range_col, lo, hi, lo_strict, hi_strict, None
+    ):
+        if verdict == "outside":
+            continue  # proven zero (range NULLs excluded by SQL too)
+        nrng = (logical or {}).get(null_col)
         if (
-            rng is None
-            or pname in tomb_parts
-            or len(rng) < 3
-            or rng[2] is None
-            or nrng is None
-            or len(nrng) < 3
-            or nrng[2] is None
+            verdict == "inside"
+            and rnulls == 0
+            and nrng is not None
+            and len(nrng) > 2
+            and nrng[2] is not None
         ):
-            scan_parts.add(pname)
-            continue
-        if int(rng[2]) == n:
-            # all-NULL range column: nothing passes the range — proven
-            # zero BEFORE the bound comparison (its [min, max] are
-            # None and would TypeError against any literal)
-            continue
-        try:
-            inside = _in_lo(rng[0]) and _in_hi(rng[1])
-        except TypeError:
-            scan_parts.add(pname)
-            continue
-        if inside and int(rng[2]) == 0:
             # every row passes the range; the null predicate's answer
             # IS the recorded null count of null_col
             nulls = int(nrng[2])
@@ -6782,25 +7112,17 @@ def range_null_count_pruned(
             scan_parts.add(pname)
     scanned = 0
     if scan_parts and not explain_only:
-        rc = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (rc > lo if lo_strict else rc >= lo)
-        if hi is not None:
-            cond = cond & (rc < hi if hi_strict else rc <= hi)
         nc = F.col(null_col)
-        cond = cond & (nc.isNotNull() if is_not else nc.isNull())
         scanned = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
+            _boundary_scan(
+                spark, path, version, scan_parts,
+                range_col, lo, hi, lo_strict, hi_strict,
             )
-            .filter(cond)
+            .filter(nc.isNotNull() if is_not else nc.isNull())
             .count()
         )
     files_scanned, files_total = _window_file_counts(
-        stats, scan_parts, range_col, lo, hi
+        man.get("stats") or {}, scan_parts, range_col, lo, hi
     )
     return {
         "count": None if explain_only else int(meta_total + scanned),
@@ -6808,1020 +7130,4 @@ def range_null_count_pruned(
         "scanned_partitions": len(scan_parts),
         "scanned_files": files_scanned,
         "total_files": files_total,
-    }
-
-
-def _eq_targets(man, path, pcol, where_partition):
-    """Shared partition-VALUE restriction for the hybrid provers:
-    None (unrestricted), the singleton member set for an equality
-    ``(pcol, value)``, or the member set for an IN-list ``(pcol,
-    [v1, v2, …])`` — partitions outside the set contribute nothing,
-    exactly ``pcol IN (…) AND <range>`` semantics (an absent member
-    restricts to an empty directory set). Raises on a non-partition
-    column or a mixed-spec table (directory names are not values of
-    the current partition column there)."""
-    if where_partition is None:
-        return None
-    meta = man.get("schema") or {}
-    # raises on a non-spec column; matches the restricted column's OWN
-    # directory level, so eq/IN on ANY component of a multi-column
-    # spec restricts exactly (absent members restrict to nothing); a
-    # LIST of conjuncts restricts per component (day = x AND source = y)
-    for wcol, _wv in _wp_conjuncts(where_partition):
-        _partition_selector(meta, wcol)
-    if _mixed_spec(man):
-        raise ValueError(
-            "partition-VALUE restriction is unprovable while "
-            f"{path} holds old-spec directories — compact_snapshot to "
-            "migrate, or scan"
-        )
-    return set(
-        _restrict_parts(
-            man.get("partitions") or {},
-            meta,
-            where_partition=where_partition,
-        )
-    )
-
-
-def range_sum_pruned(
-    spark: SparkSession,
-    path: str,
-    range_col: str,
-    sum_col: str,
-    *,
-    lo=None,
-    hi=None,
-    lo_strict: bool = False,
-    hi_strict: bool = False,
-    version: "int | str | None" = None,
-    where_partition: "tuple[str, object] | None" = None,
-    explain_only: bool = False,
-) -> dict:
-    """HYBRID ``SUM(sum_col) WHERE range_col <range>`` — the z65 idea
-    generalized from counting to summing: partitions the manifest
-    proves fully inside the range contribute their recorded
-    ``[sum, n_nonnull]`` entry (``stats_cols=["sum_col::sum"]``),
-    proven-outside contribute nothing, ONLY the remainder scans.
-
-    A metadata contribution additionally requires the partition's
-    range-column NULL COUNT to be zero (recorded in its stats entry):
-    rows with a NULL range column fail the SQL predicate but ARE
-    inside the partition's sum entry, so any nulls push the partition
-    to the scan set — provability, not approximation. Returns
-    ``{"sum" (None when nothing matched), "n_nonnull",
-    "meta_partitions", "scanned_partitions"}`` — n_nonnull is the
-    AVG denominator (predicate-passing rows with a non-null sum_col).
-    """
-    from pyspark.sql import functions as F
-
-    for c in (range_col, sum_col):
-        if (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    meta_sum, meta_n = 0, 0
-    meta_seen = False
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        sum_pair = None
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX) and _chain(
-                k[: -len(SUM_SUFFIX)]
-            ) == sum_col:
-                sum_pair = v
-        # classify FIRST: a proven-outside partition contributes
-        # nothing and needs neither a sum entry nor a scan (stats
-        # bound pre-delete rows, a superset of live — the outside
-        # proof survives tombstones)
-        if (rcomp := _spec_component(meta, man, range_col)) is not None:
-            is_null, v = _partition_value(
-                pname.split("/")[rcomp[0]], rcomp[1]
-            )
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside  # one value per dir: in or out
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
-            continue  # proven zero contribution
-        if pname in tomb_parts or sum_pair is None:
-            scan_parts.add(pname)
-            continue
-        if inside and rnulls == 0:
-            sv, nn = sum_pair[0], int(sum_pair[1])
-            if sv is not None:
-                meta_sum += int(sv)
-                meta_seen = True
-            meta_n += nn
-            meta_parts.add(pname)
-        else:
-            scan_parts.add(pname)  # boundary / unknown or >0 nulls
-    scan_sum, scan_n = None, 0
-    if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "sum": None,
-            "n_nonnull": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
-    if scan_parts:
-        c = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        row = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .agg(
-                F.sum(F.col(sum_col).cast("decimal(38,0)")).alias("s"),
-                F.count(F.col(sum_col)).alias("n"),
-            )
-            .collect()[0]
-        )
-        scan_sum = None if row["s"] is None else int(row["s"])
-        scan_n = int(row["n"])
-    total = None
-    if meta_seen or scan_sum is not None:
-        total = (meta_sum if meta_seen else 0) + (scan_sum or 0)
-    return {
-        "sum": total,
-        "n_nonnull": meta_n + scan_n,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
-
-
-def _exact_extreme(v):
-    """Normalize a SCANNED extreme for comparison with manifest
-    renderings: scanned values are EXACT, not truncatable footer stats
-    — only re-render temporals to the manifest's ISO ordering; refuse
-    types whose rendering cannot order."""
-    import datetime as _dt
-
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        raise ValueError(
-            "MIN/MAX over a boolean column is not served — "
-            "prune-useless either way"
-        )
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat()
-    return v
-
-
-def range_minmax_pruned(
-    spark: SparkSession,
-    path: str,
-    range_col: str,
-    agg_col: str,
-    *,
-    lo=None,
-    hi=None,
-    lo_strict: bool = False,
-    hi_strict: bool = False,
-    version: "int | str | None" = None,
-    where_partition: "tuple[str, object] | None" = None,
-    explain_only: bool = False,
-) -> dict:
-    """HYBRID ``MIN(agg_col)/MAX(agg_col) WHERE range_col <range>`` —
-    the last member of the z65/z72 family: partitions proven fully
-    inside the range contribute their recorded ``[min, max]`` stats
-    for ``agg_col`` (SQL MIN/MAX skip NULLs exactly as parquet
-    statistics do), proven-outside contribute nothing, ONLY the
-    boundary scans. A metadata contribution requires the member's
-    range-column null count to be zero — UNLESS the range column IS
-    the aggregated column (its NULL rows fail the predicate and are
-    absent from the stats anyway). Values compare in manifest
-    rendering (`_stat_json`): numbers natively, dates as ISO strings.
-    Returns ``{"min", "max", "meta_partitions",
-    "scanned_partitions"}`` (None extremes when nothing matched)."""
-    from pyspark.sql import functions as F
-
-    for c in (range_col, agg_col):
-        if (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    mins, maxs = [], []
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v
-            for k, v in entry.items()
-            if k != N_ROWS_KEY and not k.endswith(HLL_SUFFIX)
-            and not k.endswith(SUM_SUFFIX) and not _HIST_KEY_RE.match(k)
-        }
-        if (rcomp := _spec_component(meta, man, range_col)) is not None:
-            is_null, v = _partition_value(
-                pname.split("/")[rcomp[0]], rcomp[1]
-            )
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
-            continue
-        acomp = _spec_component(meta, man, agg_col)
-        arng = logical.get(agg_col) if acomp is None else None
-        if acomp is not None:
-            pv = _partition_value(pname.split("/")[acomp[0]], acomp[1])
-            arng = None if pv[0] else [pv[1], pv[1], 0]
-        null_ok = rnulls == 0 or range_col == agg_col
-        if (
-            inside
-            and null_ok
-            and arng is not None
-            and pname not in tomb_parts
-        ):
-            mins.append(arng[0])
-            maxs.append(arng[1])
-            meta_parts.add(pname)
-        else:
-            scan_parts.add(pname)
-    if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "min": None,
-            "max": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
-    if scan_parts:
-        c = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        row = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .agg(
-                F.min(agg_col).alias("lo"), F.max(agg_col).alias("hi")
-            )
-            .collect()[0]
-        )
-        slo, shi = _exact_extreme(row["lo"]), _exact_extreme(row["hi"])
-        if slo is not None:
-            mins.append(slo)
-        if shi is not None:
-            maxs.append(shi)
-    return {
-        "min": min(mins) if mins else None,
-        "max": max(maxs) if maxs else None,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
-
-
-def range_multi_pruned(
-    spark: SparkSession,
-    path: str,
-    range_col: str,
-    items: "list[tuple[str, str | None]]",
-    *,
-    lo=None,
-    hi=None,
-    lo_strict: bool = False,
-    hi_strict: bool = False,
-    version: "int | str | None" = None,
-    where_partition: "tuple[str, object] | None" = None,
-    explain_only: bool = False,
-) -> dict:
-    """MULTI-AGGREGATE hybrid range pass — ``SELECT COUNT(*), SUM(x),
-    AVG(x), MIN(y), MAX(y) … WHERE range_col <range>`` answered with
-    ONE partition classification and ONE boundary scan shared by every
-    aggregate (the dashboard statement shape; running the single-item
-    provers per aggregate would pay N boundary scans over the same
-    directories). ``items`` is ``[(kind, agg_col)]`` with kind one of
-    ``count/sum/avg/min/max`` (``agg_col`` ignored for count).
-
-    Classification is the strictest union of the single provers'
-    gates: a partition contributes from metadata only when EVERY item
-    is provable there — count needs the range column's recorded null
-    count, sum/avg need the ``agg_col::sum`` entry plus zero range
-    nulls (a NULL range value fails the predicate but lives in the sum
-    entry), min/max need the agg column's [min, max] plus zero range
-    nulls unless the range column IS the aggregated column. Any
-    unprovable item sends the partition to the scan set for ALL items
-    — the boundary scan computes every aggregate in a single job, so
-    provability differences cost no extra I/O. Exact by construction;
-    proven-outside partitions contribute nothing regardless of
-    tombstones ([min, max] bounds a pre-delete superset).
-
-    Returns ``{"values": [per-item], "meta_partitions",
-    "scanned_partitions"}`` where a count item yields an int, sum/avg
-    yield ``(total | None, n_nonnull)`` (the caller divides for AVG —
-    same float semantics as the scan), and min/max yield a manifest-
-    rendered value or None."""
-    from pyspark.sql import functions as F
-
-    kinds = {k for k, _ in items}
-    if not kinds <= {"count", "sum", "avg", "min", "max"}:
-        raise ValueError(
-            f"unknown aggregate kind(s) {sorted(kinds - {'count', 'sum', 'avg', 'min', 'max'})}"
-        )
-    agg_cols = [c for k, c in items if k != "count"]
-    for c in [range_col] + agg_cols:
-        if c is None or (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                         or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    sum_cols = sorted({c for k, c in items if k in ("sum", "avg")})
-    mm_cols = sorted({c for k, c in items if k in ("min", "max")})
-    meta_count = 0
-    meta_sums = {c: [0, 0, False] for c in sum_cols}  # [sum, n, seen]
-    meta_mins: dict = {c: [] for c in mm_cols}
-    meta_maxs: dict = {c: [] for c in mm_cols}
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-            and not k.endswith(HLL_SUFFIX) and not k.endswith(SUM_SUFFIX)
-            and not _HIST_KEY_RE.match(k)
-        }
-        sum_pairs = {}
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX):
-                base = _chain(k[: -len(SUM_SUFFIX)])
-                if base in sum_cols:
-                    sum_pairs[base] = v
-        # classify FIRST (shared with the single provers): outside
-        # proofs survive tombstones and need no per-item entries
-        if (rcomp := _spec_component(meta, man, range_col)) is not None:
-            is_null, v = _partition_value(
-                pname.split("/")[rcomp[0]], rcomp[1]
-            )
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
-            continue  # proven zero contribution for every item
-        if not inside or pname in tomb_parts:
-            scan_parts.add(pname)
-            continue
-        # proven inside: every item must be provable here, or the
-        # whole partition scans (one scan serves all items anyway)
-        def _mm_rng(c):
-            mcomp = _spec_component(meta, man, c)
-            if mcomp is not None:
-                pv = _partition_value(
-                    pname.split("/")[mcomp[0]], mcomp[1]
-                )
-                return None if pv[0] else [pv[1], pv[1], 0]
-            return logical.get(c)
-
-        provable = ("count" not in kinds or rnulls is not None) and all(
-            c in sum_pairs and rnulls == 0 for c in sum_cols
-        ) and all(
-            _mm_rng(c) is not None and (rnulls == 0 or range_col == c)
-            for c in mm_cols
-        )
-        if not provable:
-            scan_parts.add(pname)
-            continue
-        meta_parts.add(pname)
-        meta_count += n - int(rnulls or 0)
-        for c in sum_cols:
-            sv, nn = sum_pairs[c][0], int(sum_pairs[c][1])
-            if sv is not None:
-                meta_sums[c][0] += int(sv)
-                meta_sums[c][2] = True
-            meta_sums[c][1] += nn
-        for c in mm_cols:
-            arng = _mm_rng(c)
-            meta_mins[c].append(arng[0])
-            meta_maxs[c].append(arng[1])
-    scan_count = 0
-    scan_sums = {c: (None, 0) for c in sum_cols}
-    scan_mins = {c: None for c in mm_cols}
-    scan_maxs = {c: None for c in mm_cols}
-    if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "values": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
-    if scan_parts:
-        col = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (col > lo if lo_strict else col >= lo)
-        if hi is not None:
-            cond = cond & (col < hi if hi_strict else col <= hi)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in sum_cols:
-            aggs.append(
-                F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__s_{c}")
-            )
-            aggs.append(F.count(F.col(c)).alias(f"__c_{c}"))
-        for c in mm_cols:
-            aggs.append(F.min(c).alias(f"__lo_{c}"))
-            aggs.append(F.max(c).alias(f"__hi_{c}"))
-        row = (
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .agg(*aggs)
-            .collect()[0]
-        )
-        scan_count = int(row["__n"])
-        for c in sum_cols:
-            s = row[f"__s_{c}"]
-            scan_sums[c] = (
-                None if s is None else int(s), int(row[f"__c_{c}"])
-            )
-        for c in mm_cols:
-            scan_mins[c] = _exact_extreme(row[f"__lo_{c}"])
-            scan_maxs[c] = _exact_extreme(row[f"__hi_{c}"])
-    values = []
-    for kind, c in items:
-        if kind == "count":
-            values.append(int(meta_count + scan_count))
-        elif kind in ("sum", "avg"):
-            msum, mn, mseen = meta_sums[c]
-            ssum, sn = scan_sums[c]
-            total = None
-            if mseen or ssum is not None:
-                total = (msum if mseen else 0) + (ssum or 0)
-            values.append((total, mn + sn))
-        elif kind == "min":
-            cand = list(meta_mins[c])
-            if scan_mins[c] is not None:
-                cand.append(scan_mins[c])
-            values.append(min(cand) if cand else None)
-        else:
-            cand = list(meta_maxs[c])
-            if scan_maxs[c] is not None:
-                cand.append(scan_maxs[c])
-            values.append(max(cand) if cand else None)
-    return {
-        "values": values,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
-
-
-def range_group_counts(
-    spark: SparkSession,
-    path: str,
-    range_col: str,
-    *,
-    lo=None,
-    hi=None,
-    lo_strict: bool = False,
-    hi_strict: bool = False,
-    version: "int | str | None" = None,
-) -> dict:
-    """Grouped HYBRID range COUNT: ``SELECT pcol, COUNT(*) WHERE
-    range_col <range> GROUP BY pcol`` with the z65 discipline per
-    group — a partition proven fully inside contributes its exact
-    live count from metadata, proven-outside contributes NO group
-    (SQL: empty groups don't exist), and only boundary / stat-less /
-    tombstoned partitions scan, in ONE grouped job over just those
-    directories. The per-ingest-day "rows in this key range" panel at
-    100 TB: metadata for the interior days, data pages only for the
-    two edge days.
-
-    Returns ``{"groups": [(value, n), …] sorted by partition name
-    (zero-count groups omitted), "meta_partitions",
-    "scanned_partitions"}``."""
-    from pyspark.sql import functions as F
-
-    if (range_col.endswith(HLL_SUFFIX) or range_col.endswith(SUM_SUFFIX)
-            or _HIST_KEY_RE.match(range_col)):
-        raise ValueError(
-            "pass a data column, not a sketch entry (::hll / ::sum "
-            "/ ::hist:)"
-        )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    if not pcol:
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    if _mixed_spec(man):
-        raise ValueError(
-            f"GROUP BY {pcol!r} is unprovable while {path} holds "
-            "old-spec directories — compact_snapshot to migrate"
-        )
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    counts: dict = {}  # pname -> n (metadata-proven)
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-        }
-        if range_col == pcol:
-            is_null, v = _partition_value(pname, ptype)
-            try:
-                if (not is_null) and _in_lo(v) and _in_hi(v):
-                    counts[pname] = n
-                    meta_parts.add(pname)
-                continue  # outside (or NULL): no group
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-        rng = logical.get(range_col)
-        if rng is None:
-            scan_parts.add(pname)
-            continue
-        cmin, cmax = rng[0], rng[1]
-        try:
-            inside = _in_lo(cmin) and _in_hi(cmax)
-            outside = (
-                lo is not None
-                and (cmax < lo or (lo_strict and cmax <= lo))
-            ) or (
-                hi is not None
-                and (cmin > hi or (hi_strict and cmin >= hi))
-            )
-        except TypeError:
-            scan_parts.add(pname)
-            continue
-        nulls = rng[2] if len(rng) > 2 else None
-        if outside:
-            continue
-        if pname in tomb_parts:
-            scan_parts.add(pname)
-            continue
-        if inside and nulls is not None:
-            if n - int(nulls) > 0:
-                counts[pname] = n - int(nulls)
-                meta_parts.add(pname)
-        elif nulls is not None and nulls == n:
-            continue  # all-NULL: no group
-        else:
-            scan_parts.add(pname)
-    if scan_parts:
-        c = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (c > lo if lo_strict else c >= lo)
-        if hi is not None:
-            cond = cond & (c < hi if hi_strict else c <= hi)
-        rows = _collect_partition_groups(
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .groupBy(pcol)
-            .agg(F.count(F.lit(1)).alias("n")),
-            pcol,
-            what="range_group_counts",
-        )
-        for r in rows:
-            counts[_hive_part_name(pcol, r[0])] = int(r["n"])
-    groups = [
-        (_partition_value(pname, ptype)[1], counts[pname])
-        for pname in sorted(counts)
-    ]
-    return {
-        "groups": groups,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
-    }
-
-
-def range_group_multi(
-    spark: SparkSession,
-    path: str,
-    range_col: str,
-    items: "list[tuple[str, str | None]]",
-    *,
-    lo=None,
-    hi=None,
-    lo_strict: bool = False,
-    hi_strict: bool = False,
-    version: "int | str | None" = None,
-    where_partition: "tuple[str, object] | None" = None,
-    explain_only: bool = False,
-) -> dict:
-    """Grouped MULTI-AGGREGATE hybrid range pass: ``SELECT pcol,
-    COUNT(*), SUM(x), AVG(x), MIN(y), MAX(y) … WHERE range_col
-    <range> GROUP BY pcol`` — :func:`range_group_counts` generalized
-    to :func:`range_multi_pruned`'s item lists. Group ≡ partition, so
-    each group classifies independently: a partition proven fully
-    inside serves EVERY item from its metadata (same per-item gates
-    as range_multi_pruned — count: recorded range nulls; sum/avg:
-    the ``::sum`` entry + zero range nulls; min/max: recorded
-    extremes, null guard waived when range col == agg col), a
-    proven-outside or empty-after-nulls partition produces NO group
-    (SQL: empty groups don't exist), and every partition with ANY
-    unprovable item scans — all of them in ONE grouped job over just
-    those directories, every aggregate computed together. The
-    per-ingest-day dashboard panel at 100 TB: metadata rows for the
-    interior days, one grouped scan for the two edge days.
-
-    Returns ``{"groups": [(value, [per-item values]), …] sorted by
-    partition name, "meta_partitions", "scanned_partitions"}`` with
-    the same per-item value shapes as range_multi_pruned (count →
-    int; sum/avg → ``(total | None, n_nonnull)``; min/max → rendered
-    value or None)."""
-    from pyspark.sql import functions as F
-
-    kinds = {k for k, _ in items}
-    if not kinds <= {"count", "sum", "avg", "min", "max"}:
-        raise ValueError(
-            f"unknown aggregate kind(s) "
-            f"{sorted(kinds - {'count', 'sum', 'avg', 'min', 'max'})}"
-        )
-    agg_cols = [c for k, c in items if k != "count"]
-    for c in [range_col] + agg_cols:
-        if c is None or (c.endswith(HLL_SUFFIX) or c.endswith(SUM_SUFFIX)
-                         or _HIST_KEY_RE.match(c)):
-            raise ValueError(
-                "pass data columns, not sketch entries (::hll / ::sum "
-                "/ ::hist:)"
-            )
-    man = read_manifest(path, version)
-    meta = man.get("schema") or {}
-    pcol = meta.get("partition_col")
-    if not pcol:
-        raise ValueError(
-            f"snapshot table at {path!r} is unpartitioned — no "
-            "partition column to group by"
-        )
-    if _mixed_spec(man):
-        raise ValueError(
-            f"GROUP BY {pcol!r} is unprovable while {path} holds "
-            "old-spec directories — compact_snapshot to migrate"
-        )
-    renames = meta.get("renames") or []
-
-    def _chain(name: str) -> str:
-        for old, new in renames:
-            if name == old:
-                name = new
-        return name
-
-    def _in_lo(v) -> bool:
-        return lo is None or (v > lo if lo_strict else v >= lo)
-
-    def _in_hi(v) -> bool:
-        return hi is None or (v < hi if hi_strict else v <= hi)
-
-    stats = man.get("stats") or {}
-    tomb_parts = (man.get("tombstones") or {}).get("parts") or {}
-    part_rows = _partition_rows(man, path)
-    ptype = meta.get("partition_type") or "string"
-    targets = _eq_targets(man, path, pcol, where_partition)
-    sum_cols = sorted({c for k, c in items if k in ("sum", "avg")})
-    mm_cols = sorted({c for k, c in items if k in ("min", "max")})
-    per_group: dict = {}  # pname -> [per-item values]
-    meta_parts: set = set()
-    scan_parts: set = set()
-    for pname, n in part_rows.items():
-        if targets is not None and pname not in targets:
-            continue  # non-member: no group (IN restricts directories)
-        if n == 0:
-            continue
-        entry = stats.get(pname) or {}
-        logical = {
-            _chain(k): v for k, v in entry.items()
-            if k not in (N_ROWS_KEY, FILES_KEY)
-            and not k.endswith(HLL_SUFFIX) and not k.endswith(SUM_SUFFIX)
-            and not _HIST_KEY_RE.match(k)
-        }
-        sum_pairs = {}
-        for k, v in entry.items():
-            if k.endswith(SUM_SUFFIX):
-                base = _chain(k[: -len(SUM_SUFFIX)])
-                if base in sum_cols:
-                    sum_pairs[base] = v
-        if range_col == pcol:
-            is_null, v = _partition_value(pname, ptype)
-            try:
-                inside = (not is_null) and _in_lo(v) and _in_hi(v)
-                outside = not inside
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = 0
-        else:
-            rng = logical.get(range_col)
-            if rng is None:
-                scan_parts.add(pname)
-                continue
-            cmin, cmax = rng[0], rng[1]
-            try:
-                inside = _in_lo(cmin) and _in_hi(cmax)
-                outside = (
-                    lo is not None
-                    and (cmax < lo or (lo_strict and cmax <= lo))
-                ) or (
-                    hi is not None
-                    and (cmin > hi or (hi_strict and cmin >= hi))
-                )
-            except TypeError:
-                scan_parts.add(pname)
-                continue
-            rnulls = rng[2] if len(rng) > 2 else None
-        if outside and not inside:
-            continue  # no group
-        if not inside or pname in tomb_parts:
-            scan_parts.add(pname)
-            continue
-
-        def _mm_rng(c):
-            if c == pcol:
-                pv = _partition_value(pname, ptype)
-                return None if pv[0] else [pv[1], pv[1], 0]
-            return logical.get(c)
-
-        provable = rnulls is not None and all(
-            c in sum_pairs and rnulls == 0 for c in sum_cols
-        ) and all(
-            _mm_rng(c) is not None and (rnulls == 0 or range_col == c)
-            for c in mm_cols
-        )
-        if not provable:
-            scan_parts.add(pname)
-            continue
-        live = n - int(rnulls)
-        if live <= 0:
-            continue  # all rows fail the predicate: no group
-        meta_parts.add(pname)
-        vals = []
-        for kind, c in items:
-            if kind == "count":
-                vals.append(live)
-            elif kind in ("sum", "avg"):
-                sv, nn = sum_pairs[c][0], int(sum_pairs[c][1])
-                vals.append((None if sv is None else int(sv), nn))
-            elif kind == "min":
-                vals.append(_mm_rng(c)[0])
-            else:
-                vals.append(_mm_rng(c)[1])
-        per_group[pname] = vals
-    if explain_only:
-        fs, ft = _window_file_counts(stats, scan_parts, range_col, lo, hi)
-        return {
-            "groups": None,
-            "meta_partitions": len(meta_parts),
-            "scanned_partitions": len(scan_parts),
-            "scanned_files": fs,
-            "total_files": ft,
-        }
-    if scan_parts:
-        col = F.col(range_col)
-        cond = F.lit(True)
-        if lo is not None:
-            cond = cond & (col > lo if lo_strict else col >= lo)
-        if hi is not None:
-            cond = cond & (col < hi if hi_strict else col <= hi)
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in sum_cols:
-            aggs.append(
-                F.sum(F.col(c).cast("decimal(38,0)")).alias(f"__s_{c}")
-            )
-            aggs.append(F.count(F.col(c)).alias(f"__c_{c}"))
-        for c in mm_cols:
-            aggs.append(F.min(c).alias(f"__lo_{c}"))
-            aggs.append(F.max(c).alias(f"__hi_{c}"))
-        rows = _collect_partition_groups(
-            read_snapshot(
-                spark, path, version,
-                partition_filter=lambda p: p in scan_parts,
-                column_ranges={range_col: (lo, hi)},
-            )
-            .filter(cond)
-            .groupBy(pcol)
-            .agg(*aggs),
-            pcol,
-            what="range_group_multi",
-        )
-        for r in rows:
-            vals = []
-            for kind, c in items:
-                if kind == "count":
-                    vals.append(int(r["__n"]))
-                elif kind in ("sum", "avg"):
-                    s = r[f"__s_{c}"]
-                    vals.append(
-                        (None if s is None else int(s), int(r[f"__c_{c}"]))
-                    )
-                elif kind == "min":
-                    vals.append(_exact_extreme(r[f"__lo_{c}"]))
-                else:
-                    vals.append(_exact_extreme(r[f"__hi_{c}"]))
-            per_group[_hive_part_name(pcol, r[0])] = vals
-    groups = [
-        (_partition_value(pname, ptype)[1], per_group[pname])
-        for pname in sorted(per_group)
-    ]
-    return {
-        "groups": groups,
-        "meta_partitions": len(meta_parts),
-        "scanned_partitions": len(scan_parts),
     }

@@ -60,6 +60,14 @@ _memory_sink_ids = itertools.count()
 #: makes the failure itself cheap.
 MAX_OPTOUT_BATCH_KEYS = 100_000
 
+#: Default shuffle/state partition count for :func:`run_available_now`
+#: drains (see its docstring for the sizing argument).
+_STATE_PARTITIONS = 8
+
+#: Attempts per micro-batch commit before a lost optimistic race
+#: escapes ``foreachBatch`` (see :func:`_retry_commit`).
+_COMMIT_ATTEMPTS = 5
+
 
 def _events_ts_kind(sample_file: str) -> str:
     """Classify the fixture's physical ``ts`` encoding from the parquet
@@ -208,18 +216,9 @@ def events_stream_multibatch(
     harness for stateful operators, where watermark advance and
     state-store handoff actually differ from a single-batch GROUP BY.
 
-    ``SPARK_GRAFT_STREAM_SINGLE_BATCH=1`` (bench-only floor-experiment
-    knob, r12 verdict ask #7) replays the fixture as ONE batch instead:
-    the final append output is identical (the time-ordered split never
-    produces a late event — pinned in tests/test_streaming.py), only
-    the per-micro-batch state-store commit count changes. Default off:
-    the ≥3-batch replay is what the streaming fixtures exist to
-    exercise. Production guidance: batch size is the
-    maxFilesPerTrigger / trigger-interval knob — fewer, larger
-    micro-batches amortize the per-store commit floor measured in
-    OPTIMIZATION_r13.md."""
-    if os.environ.get("SPARK_GRAFT_STREAM_SINGLE_BATCH") == "1":
-        return events_stream(spark, sf_dir)
+    Production guidance: batch size is the maxFilesPerTrigger /
+    trigger-interval knob — fewer, larger micro-batches amortize the
+    per-store commit floor measured in OPTIMIZATION_r13.md."""
     try:
         glob = split_events_by_time(spark, sf_dir, n_files)
     except Exception:  # noqa: BLE001 — tmp not writable / exotic env
@@ -402,7 +401,7 @@ def run_available_now(
     sized by live state volume, a deployment knob: an unbounded
     production stream with wide key spaces raises it (it is fixed at
     first start by the checkpoint); the finite harness fixture wants it
-    small. Default 8, env-overridable.
+    small. Default 8.
 
     ``progress_out``, if given, receives ``numInputRows`` per non-empty
     micro-batch — how tests pin that a multi-file source really
@@ -410,9 +409,7 @@ def run_available_now(
     """
     spark = df.sparkSession
     if state_partitions is None:
-        state_partitions = int(
-            os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-        )
+        state_partitions = _STATE_PARTITIONS
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     name = f"__stream_result_{next(_memory_sink_ids)}"
     try:
@@ -455,6 +452,24 @@ def foreach_batch_sink(
     q.awaitTermination(timeout_sec)
 
 
+def _retry_commit(commit: Callable[[], None]) -> None:
+    """Run one micro-batch commit, retrying a lost optimistic race
+    (``ConcurrentCommitError``) in-run up to ``_COMMIT_ATTEMPTS`` times
+    — each attempt re-reads the current version, so a retry is
+    result-identical; the last attempt's error re-raises (under
+    ``trigger(availableNow)`` it then terminates the query, and the
+    checkpoint restart takes over)."""
+    from ..sources.snapshot import ConcurrentCommitError
+
+    for i in range(_COMMIT_ATTEMPTS):
+        try:
+            commit()
+            return
+        except ConcurrentCommitError:
+            if i == _COMMIT_ATTEMPTS - 1:
+                raise
+
+
 def stream_merge_sink(
     df: DataFrame,
     table_path: str,
@@ -490,24 +505,19 @@ def stream_merge_sink(
     fallback (the txn watermark makes the restart a no-op for any batch
     that did land).
     """
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                merge_snapshot(
-                    table_path,
-                    batch_df,
-                    key,
-                    partition_col,
-                    txn=(app_id, batch_id),
-                    branch=branch,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: merge_snapshot(
+                table_path,
+                batch_df,
+                key,
+                partition_col,
+                txn=(app_id, batch_id),
+                branch=branch,
+            )
+        )
 
     foreach_batch_sink(
         df, _merge, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -535,23 +545,18 @@ def stream_append_sink(
     ``branch`` makes it the streaming write-audit-publish path, and —
     because append claims nothing about existing content — this sink
     also stays legal mid-migration after evolve_partition_spec."""
-    from ..sources.snapshot import ConcurrentCommitError, append_snapshot
+    from ..sources.snapshot import append_snapshot
 
     def _append(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                append_snapshot(
-                    table_path,
-                    batch_df,
-                    partition_col,
-                    txn=(app_id, batch_id),
-                    branch=branch,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: append_snapshot(
+                table_path,
+                batch_df,
+                partition_col,
+                txn=(app_id, batch_id),
+                branch=branch,
+            )
+        )
 
     foreach_batch_sink(
         df, _append, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -598,7 +603,7 @@ def stream_optout_sink(
     :func:`stream_merge_sink`."""
     from pyspark.sql import functions as F
 
-    from ..sources.snapshot import ConcurrentCommitError, delete_where
+    from ..sources.snapshot import delete_where
 
     def _delete(batch_df: DataFrame, batch_id: int) -> None:
         cap = MAX_OPTOUT_BATCH_KEYS
@@ -621,21 +626,16 @@ def stream_optout_sink(
         if not ids:
             return
         spark = batch_df.sparkSession
-        attempts = 5
-        for i in range(attempts):
-            try:
-                delete_where(
-                    spark,
-                    table_path,
-                    F.col(key).isin(ids),
-                    txn=(app_id, batch_id),
-                    mode=mode,
-                    key=key if mode == "merge-on-read" else None,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: delete_where(
+                spark,
+                table_path,
+                F.col(key).isin(ids),
+                txn=(app_id, batch_id),
+                mode=mode,
+                key=key if mode == "merge-on-read" else None,
+            )
+        )
 
     foreach_batch_sink(
         df, _delete, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -673,32 +673,28 @@ def stream_dedup_ingest(
     in-run like :func:`stream_merge_sink`.
     """
     from ..operators.dedup import incremental_minhash_dedup
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                res, _ = incremental_minhash_dedup(
-                    batch_df,
-                    store_path,
-                    batch_id=batch_id,
-                    threshold=threshold,
-                    text_col=text_col,
-                    id_col=id_col,
-                    app_id=app_id,
-                )
-                merge_snapshot(
-                    results_path,
-                    res.withColumn("__batch", F.lit(batch_id)),
-                    "doc_id",
-                    "__batch",
-                    txn=(f"{app_id}-results", batch_id),
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        def _commit() -> None:
+            res, _ = incremental_minhash_dedup(
+                batch_df,
+                store_path,
+                batch_id=batch_id,
+                threshold=threshold,
+                text_col=text_col,
+                id_col=id_col,
+                app_id=app_id,
+            )
+            merge_snapshot(
+                results_path,
+                res.withColumn("__batch", F.lit(batch_id)),
+                "doc_id",
+                "__batch",
+                txn=(f"{app_id}-results", batch_id),
+            )
+
+        _retry_commit(_commit)
 
     foreach_batch_sink(
         df, _ingest, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -742,39 +738,32 @@ def stream_semantic_dedup_ingest(
     optimistic races retry in-run.
     """
     from ..operators.similarity import incremental_semantic_dedup
-    from ..sources.snapshot import (
-        ConcurrentCommitError,
-        merge_snapshot,
-        read_snapshot,
-    )
+    from ..sources.snapshot import merge_snapshot, read_snapshot
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        attempts = 5
-        for i in range(attempts):
-            try:
-                cents = read_snapshot(spark, centroids_path)
-                res, _ = incremental_semantic_dedup(
-                    batch_df,
-                    store_path,
-                    cents,
-                    batch_id=batch_id,
-                    threshold=threshold,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    app_id=app_id,
-                )
-                merge_snapshot(
-                    results_path,
-                    res.withColumn("__batch", F.lit(batch_id)),
-                    id_col,
-                    "__batch",
-                    txn=(f"{app_id}-results", batch_id),
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+
+        def _commit() -> None:
+            cents = read_snapshot(spark, centroids_path)
+            res, _ = incremental_semantic_dedup(
+                batch_df,
+                store_path,
+                cents,
+                batch_id=batch_id,
+                threshold=threshold,
+                id_col=id_col,
+                vec_col=vec_col,
+                app_id=app_id,
+            )
+            merge_snapshot(
+                results_path,
+                res.withColumn("__batch", F.lit(batch_id)),
+                id_col,
+                "__batch",
+                txn=(f"{app_id}-results", batch_id),
+            )
+
+        _retry_commit(_commit)
 
     foreach_batch_sink(
         df, _ingest, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -811,24 +800,18 @@ def stream_ivfpq_ingest(
     carry-by-reference matters.
     """
     from ..operators.similarity import append_ivfpq_index
-    from ..sources.snapshot import ConcurrentCommitError
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
-        attempts = 5
-        for i in range(attempts):
-            try:
-                append_ivfpq_index(
-                    batch_df,
-                    index_path,
-                    batch_id=batch_id,
-                    id_col=id_col,
-                    vec_col=vec_col,
-                    app_id=app_id,
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: append_ivfpq_index(
+                batch_df,
+                index_path,
+                batch_id=batch_id,
+                id_col=id_col,
+                vec_col=vec_col,
+                app_id=app_id,
+            )
+        )
 
     foreach_batch_sink(
         df, _ingest, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -869,7 +852,7 @@ def stream_quality_gate(
     the usual missing-table ``FileNotFoundError``, not an empty frame.
     """
     from ..operators.classifier import score_docs
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         scored = score_docs(
@@ -891,20 +874,15 @@ def stream_quality_gate(
             # Skipping is replay-safe — the model is fixed for the
             # run, so a crash-replayed batch re-gates to empty again.
             return
-        attempts = 5
-        for i in range(attempts):
-            try:
-                merge_snapshot(
-                    out_path,
-                    kept,
-                    id_col,
-                    "__batch",
-                    txn=(app_id, batch_id),
-                )
-                return
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: merge_snapshot(
+                out_path,
+                kept,
+                id_col,
+                "__batch",
+                txn=(app_id, batch_id),
+            )
+        )
 
     foreach_batch_sink(
         df, _gate, checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec
@@ -941,43 +919,34 @@ def stream_sum_view(
     idempotent.
     """
     from ..sources.matview import maintain_sum_view
-    from ..sources.snapshot import ConcurrentCommitError, merge_snapshot
+    from ..sources.snapshot import merge_snapshot
 
     def _ingest_and_maintain(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        attempts = 5
-        for i in range(attempts):
-            try:
-                merge_snapshot(
-                    source_path,
-                    batch_df,
-                    key,
-                    partition_col,
-                    txn=(app_id, batch_id),
-                )
-                break
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: merge_snapshot(
+                source_path,
+                batch_df,
+                key,
+                partition_col,
+                txn=(app_id, batch_id),
+            )
+        )
         # the view merge can lose an optimistic race against a manual
         # maintenance cycle (CLI `matview`) — retry in-run like every
         # other sink here; each attempt re-reads the fresh watermark,
         # so a racing cycle that already applied the range turns the
         # retry into a caught-up no-op.
-        for i in range(attempts):
-            try:
-                maintain_sum_view(
-                    spark,
-                    source_path,
-                    view_path,
-                    key=key,
-                    group_col=group_col,
-                    sum_col=sum_col,
-                )
-                break
-            except ConcurrentCommitError:
-                if i == attempts - 1:
-                    raise
+        _retry_commit(
+            lambda: maintain_sum_view(
+                spark,
+                source_path,
+                view_path,
+                key=key,
+                group_col=group_col,
+                sum_col=sum_col,
+            )
+        )
 
     foreach_batch_sink(
         df,

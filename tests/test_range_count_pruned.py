@@ -496,13 +496,29 @@ def test_range_multi_pruned_one_shared_pass(spark, tmp_path):
     )
 
     rows = [(i, i // 100, i * 3 if i % 7 else None) for i in range(1000)]
-    df = spark.createDataFrame(rows, "k long, b long, cents long")
+    # bucket 99: the range column is NULL in every row — its recorded
+    # [None, None, nulls] entry proves it contributes nothing to any item
+    null_rows = [(None, 99, 5), (None, 99, None)]
+    df = spark.createDataFrame(rows + null_rows, "k long, b long, cents long")
     path = str(tmp_path / "m")
     write_snapshot(df, path, "b", stats_cols=["k", "cents", "cents::sum"])
     items = [
         ("count", None), ("sum", "cents"), ("avg", "cents"),
         ("min", "cents"), ("max", "cents"), ("min", "k"),
     ]
+    # every bucket but 99 fully inside: all metadata, bucket 99 neither
+    # metadata nor scanned — its parquet can vanish
+    for f in Path(path).rglob("*.parquet"):
+        if "b=99" in str(f):
+            f.unlink()
+    full = range_multi_pruned(spark, path, "k", items, lo=0)
+    nn_all = [c for _, _, c in rows if c is not None]
+    assert full["values"] == [
+        len(rows), (sum(nn_all), len(nn_all)), (sum(nn_all), len(nn_all)),
+        min(nn_all), max(nn_all), 0,
+    ]
+    assert full["meta_partitions"] == 10
+    assert full["scanned_partitions"] == 0
     out = range_multi_pruned(spark, path, "k", items, lo=250, hi=449)
     sel = [(k, c) for (k, _, c) in rows if 250 <= k <= 449]
     nn = [c for _, c in sel if c is not None]
@@ -561,10 +577,25 @@ def test_range_group_multi_and_sql_tier(spark, tmp_path):
     )
 
     rows = [(i, i // 100, i * 3 if i % 7 else None) for i in range(1000)]
-    df = spark.createDataFrame(rows, "k long, b long, cents long")
+    # bucket 99: the range column is NULL in every row — proven to form
+    # no group without a scan
+    null_rows = [(None, 99, 5), (None, 99, None)]
+    df = spark.createDataFrame(rows + null_rows, "k long, b long, cents long")
     path = str(tmp_path / "g")
     write_snapshot(df, path, "b", stats_cols=["k", "cents", "cents::sum"])
     items = [("count", None), ("sum", "cents"), ("min", "k")]
+    for f in Path(path).rglob("*.parquet"):
+        if "b=99" in str(f):
+            f.unlink()
+    full = range_group_multi(spark, path, "k", items, hi=999)
+    assert full["meta_partitions"] == 10
+    assert full["scanned_partitions"] == 0
+    want_full = []
+    for bkt in range(10):
+        ks = [k for (k, bb, _c) in rows if bb == bkt]
+        nn = [c for (_k, bb, c) in rows if bb == bkt and c is not None]
+        want_full.append((bkt, [len(ks), (sum(nn), len(nn)), min(ks)]))
+    assert full["groups"] == want_full  # no group for bucket 99
     out = range_group_multi(spark, path, "k", items, lo=250, hi=449)
     assert out["meta_partitions"] == 1 and out["scanned_partitions"] == 2
     got = {v: vals for v, vals in out["groups"]}
