@@ -45,8 +45,7 @@ def lookup_join(
     collision becomes an explicit, reviewable alias.
     """
     if rename:
-        for old, new in rename.items():
-            dim = dim.withColumnRenamed(old, new)
+        dim = dim.withColumnsRenamed(dict(rename))
     right = F.broadcast(dim) if broadcast else dim
     out = df.join(right, on, how)
     if drop:
@@ -78,16 +77,22 @@ def existence_flag_join(
     the distinct key set can exceed driver/executor memory, and the
     unhinted plan becomes a shuffle join AQE is free to re-plan.
     """
+    hit = f"__{flag_name}_hit"
     marker = (
         keys.select(F.col(right_key).alias(left_key))
         .distinct()
-        .withColumn(f"__{flag_name}_hit", F.lit(1))
+        .withColumn(hit, F.lit(1))
     )
     out = df.join(F.broadcast(marker) if broadcast else marker, left_key, "left")
-    return out.withColumn(
-        flag_name,
-        F.when(F.col(f"__{flag_name}_hit").isNotNull(), F.lit(1)).otherwise(F.lit(0)),
-    ).drop(f"__{flag_name}_hit")
+    # One projection: the flag replaces a same-named column in place or
+    # is appended, and the marker is dropped.
+    flag = (
+        F.when(F.col(hit).isNotNull(), F.lit(1)).otherwise(F.lit(0)).alias(flag_name)
+    )
+    cols = [flag if c == flag_name else F.col(c) for c in out.columns if c != hit]
+    if flag_name not in out.columns:
+        cols.append(flag)
+    return out.select(*cols)
 
 
 def asof_join(

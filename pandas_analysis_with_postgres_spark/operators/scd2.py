@@ -61,11 +61,17 @@ def scd2_apply(
     reference's ``udate_party``) and optionally ``create_ts_col``
     (``cdate_party``) used when the change timestamp is NULL.
 
-    Scale: two shuffle joins on ``key`` (change detection + close-out)
-    and zero driver materialization. The *changed* delta is typically a
-    small fraction of history → AQE broadcasts it into the close-out
-    join. History itself is only filtered/unioned, never re-shuffled, so
-    a date-partitioned 100 TB history table prunes to the current slice.
+    Scale: two joins on ``key`` (change detection + ONE close-out left
+    join) and zero driver materialization. The close-out joins the
+    current rows once against the *changed* keys and the hit marker
+    rewrites the three close-out columns in place, so current history
+    feeds one close-out join instead of two (an inner join for the
+    closed rows plus an anti join for the untouched ones). The
+    *changed* delta is typically a small fraction of history, and a
+    left join builds its right side, so AQE can broadcast the delta
+    into it. Non-current history is only filtered and unioned, never
+    joined, so a date-partitioned 100 TB history table prunes to the
+    current slice.
     """
     if compare_cols is None:
         compare_cols = [
@@ -102,16 +108,26 @@ def scd2_apply(
     changed = changed_rows(staged, current, key, compare_cols)
 
     # M3 — close out superseded current rows (dmCustomerProc.py:210-216).
+    # One left join: a hit closes the row, a miss leaves it untouched.
     close_keys = changed.select(F.col(key).alias("__ck"), effective_ts.alias("__close_ts"))
-    closing = current.join(close_keys, current[key] == F.col("__ck"), "inner")
-    closed = closing.withColumns(
-        {
-            "effective_to_date": F.col("__close_ts"),
-            "is_current_record": F.lit(0),
-            "sys_effective_to_date": now,
-        }
-    ).drop("__ck", "__close_ts")
-    untouched_current = current.join(close_keys, current[key] == F.col("__ck"), "left_anti")
+    hit = F.col("__ck").isNotNull()
+    current = (
+        current.join(close_keys, current[key] == F.col("__ck"), "left")
+        .withColumns(
+            {
+                "effective_to_date": F.when(hit, F.col("__close_ts")).otherwise(
+                    F.col("effective_to_date")
+                ),
+                "is_current_record": F.when(hit, F.lit(0)).otherwise(
+                    F.col("is_current_record")
+                ),
+                "sys_effective_to_date": F.when(hit, now).otherwise(
+                    F.col("sys_effective_to_date")
+                ),
+            }
+        )
+        .drop("__ck", "__close_ts")
+    )
 
     # M4 — open the new versions (dmCustomerProc.py:218-232).
     opened = changed.withColumns(
@@ -124,10 +140,8 @@ def scd2_apply(
         }
     )
 
-    return (
-        non_current.unionByName(untouched_current)
-        .unionByName(closed)
-        .unionByName(opened, allowMissingColumns=True)
+    return non_current.unionByName(current).unionByName(
+        opened, allowMissingColumns=True
     )
 
 

@@ -3,9 +3,11 @@
 This is the whole of reference ``dmCustomerProc.py`` (SQL-1…SQL-16,
 ``dmCustomerProc.py:17-232``) re-expressed Spark-first over the staging
 schema of FIXTURES.md §B. Where the reference runs 16 eagerly
-materialized pandas stages in one thread, here each output table is ONE
-lazy DataFrame plan: Catalyst fuses the stages, broadcasts the lookup
-dims, and nothing materializes before the sink.
+materialized pandas stages in one thread, here the wide build is ONE
+lazy DataFrame plan (Catalyst fuses the stages and broadcasts the
+lookup dims) and exactly one thing materializes before the sinks: the
+deduped staged rows, computed once and read by both the dimension
+upsert and the SCD2 history (see :func:`run_customer_pipeline`).
 
 Intended-semantics deviations from the reference (each documented at
 its stage, per SURVEY §7.5):
@@ -38,7 +40,7 @@ from ..operators.joins import cross_join_defaults, existence_flag_join, lookup_j
 from ..operators.scd2 import SCD2_COLS, scd2_apply
 from ..operators.setops import union_by_name
 from ..operators.upsert import upsert
-from ..operators.windows import top1_per_group
+from ..operators.windows import keep_first_dedup, top1_per_group
 
 #: Notification-topic → flag-column encoding (reference SQL-8/SQL-9).
 #: Both topic IDs and ALL nine flag names are the reference's, spelled
@@ -79,11 +81,8 @@ def build_wide_customer(t: Mapping[str, DataFrame]) -> DataFrame:
     # dmCustomerProc.py:17-45). Renames disambiguate key collisions
     # (P2, :23-28) — Spark makes the aliasing explicit.
     cust = t["stg_dce_cust"].withColumnRenamed("st_id", "st_id_cust")
-    party = (
-        t["stg_dce_party"]
-        .withColumnRenamed("st_id", "st_id_party")
-        .withColumnRenamed("cdate", "cdate_party")
-        .withColumnRenamed("udate", "udate_party")
+    party = t["stg_dce_party"].withColumnsRenamed(
+        {"st_id": "st_id_party", "cdate": "cdate_party", "udate": "udate_party"}
     )
     wide = cust.join(party, "party_id", "left")
     wide = lookup_join(
@@ -192,10 +191,8 @@ def build_wide_customer(t: Mapping[str, DataFrame]) -> DataFrame:
     # aliases; the reference's prty_id_x/_y suffix collision (:187)
     # becomes explicit renames.
     lang = t["stg_dce_lang"]
-    user = (
-        t["stg_dce_apl_user"]
-        .withColumnRenamed("party_id", "prty_id")
-        .withColumnRenamed("st_id", "st_id_user")
+    user = t["stg_dce_apl_user"].withColumnsRenamed(
+        {"party_id": "prty_id", "st_id": "st_id_user"}
     )
     user = lookup_join(
         user,
@@ -235,13 +232,32 @@ def run_customer_pipeline(
 ) -> dict[str, DataFrame]:
     """The full job: E1 wide build + E2 dimension upsert + E3 SCD2.
 
-    Returns ``{"wide": …, "dim": …, "history": …}`` — three lazy plans
-    sharing the wide-customer subtree.
+    Returns ``{"wide": …, "dim": …, "history": …}``. ``wide`` is the
+    lazy wide-customer plan; ``dim`` and ``history`` are lazy plans over
+    ONE staged materialization: staged = pre-customer rows ∪ fresh wide
+    rows, deduped to one survivor per ``cust_id`` (latest
+    ``coalesce(udate_party, cdate_party)`` first, NULLs last, the
+    business columns as a deterministic tiebreak) and pinned with
+    ``localCheckpoint(eager=False)``. Under AQE, pinning it already runs
+    the staged plan's shuffle stages; its last stage runs with the
+    first sink. Both sinks then read one small ``Scan ExistingRDD`` leaf
+    instead of analysing, optimising, code-generating and running the
+    16-table wide subtree once per copy (two in the upsert, three in
+    the SCD2).
+    The one dedup also makes both sinks pick the SAME survivor for a
+    ``cust_id`` staged twice.
 
-    E2 (SQL-11…13, ``dmCustomerProc.py:185-203``): staged = pre-customer
-    rows ∪ fresh wide rows; dimension = keyed upsert (UPDATE-from via
-    join-COALESCE + INSERT-if-absent via anti join), stamped with the
-    injected ETL timestamp.
+    The trade is the one ``operators.graph`` documents for its
+    checkpoints: lineage is truncated at the staged rows, so an
+    executor loss during the run fails it instead of recomputing the
+    lost blocks, and the blocks are released when the returned frames
+    are dropped.
+
+    E2 (SQL-11…13, ``dmCustomerProc.py:185-203``): dimension = keyed
+    upsert of the staged rows (UPDATE-from via join-COALESCE +
+    INSERT-if-absent via anti join — two joins against the small staged
+    side, where one full outer join would shuffle the whole dimension),
+    stamped with the injected ETL timestamp.
 
     E3 (SQL-14…16, ``dmCustomerProc.py:205-232``): SCD2 maintenance —
     change detection against current history (null-safe), close-out at
@@ -252,6 +268,12 @@ def run_customer_pipeline(
     staged = (
         union_by_name(dwd_pre_customer, wide) if dwd_pre_customer is not None else wide
     )
+    staged = keep_first_dedup(
+        staged,
+        "cust_id",
+        [F.coalesce("udate_party", "cdate_party").desc_nulls_last()]
+        + [F.col(c).desc_nulls_last() for c in staged.columns if c != "cust_id"],
+    ).localCheckpoint(eager=False)
 
     dim = upsert(
         dwd_customer,

@@ -11,7 +11,9 @@ defaults), and app users in the invalid-email status band (P5).
 
 from __future__ import annotations
 
+import contextlib
 import datetime
+import io
 import random
 
 import pytest
@@ -216,11 +218,9 @@ def test_invalid_email_band(wide):
     assert flagged[2] is None  # no app user row at all
 
 
-def test_upsert_and_scd2_invariants(spark, tables, wide):
-    dim0 = (
-        wide.filter(F.col("cust_id") % 2 == 0)
-        .withColumn("etl_date", F.lit(T2020))
-    )
+def _prior(wide):
+    """Yesterday's warehouse: the even customers, current since 2020."""
+    dim0 = wide.filter(F.col("cust_id") % 2 == 0).withColumn("etl_date", F.lit(T2020))
     hstr0 = dim0.drop("etl_date").withColumns(
         {
             "effective_from_date": F.lit(T2020),
@@ -230,6 +230,11 @@ def test_upsert_and_scd2_invariants(spark, tables, wide):
             "sys_effective_to_date": F.lit(None).cast("timestamp"),
         }
     )
+    return dim0, hstr0
+
+
+def test_upsert_and_scd2_invariants(spark, tables, wide):
+    dim0, hstr0 = _prior(wide)
     out = run_customer_pipeline(
         tables,
         dwd_customer=dim0,
@@ -315,3 +320,69 @@ def test_upsert_and_scd2_invariants(spark, tables, wide):
     dim.unpersist()
     hstr.unpersist()
     hstr2.unpersist()
+
+
+def test_dim_and_history_agree_on_a_twice_staged_key(spark, tables, wide):
+    """A cust_id staged twice (pre-customer row ∪ wide row) must leave
+    the SAME survivor in both sinks: the row with the latest
+    coalesce(udate_party, cdate_party) — here the 2023 wide row, even
+    though the 2020 pre row's email sorts higher."""
+    party = tables["stg_dce_party"].withColumns(
+        {
+            "email": F.when(F.col("party_id") == 105, F.lit("aaa")).otherwise(
+                F.col("email")
+            ),
+            "udate": F.when(
+                F.col("party_id") == 105, F.lit(datetime.datetime(2023, 1, 1))
+            ).otherwise(F.col("udate")),
+        }
+    )
+    t = {**tables, "stg_dce_party": party}
+    pre = wide.filter(F.col("cust_id") == 5).withColumns(
+        {"email": F.lit("zzz"), "udate_party": F.lit(T2020)}
+    )
+    dim0, hstr0 = _prior(wide)
+    out = run_customer_pipeline(
+        t, dwd_customer=dim0, dwd_hstr_customer=hstr0, dwd_pre_customer=pre,
+        now=F.lit(NOW),
+    )
+    want = ("aaa", datetime.datetime(2023, 1, 1))
+    dim = out["dim"].filter(F.col("cust_id") == 5).collect()
+    assert [(r["email"], r["udate_party"]) for r in dim] == [want]
+    cur = (
+        out["history"]
+        .filter((F.col("cust_id") == 5) & (F.col("is_current_record") == 1))
+        .collect()
+    )
+    assert [(r["email"], r["udate_party"]) for r in cur] == [want]
+
+
+def _explain(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def test_sinks_read_one_staged_materialization(spark, tables, wide, tmp_path):
+    """Both sinks read the ONE staged materialization (a Scan
+    ExistingRDD leaf), never the staging tables, and the SCD2 close-out
+    is one join against the changed keys, not inner + anti."""
+    t = {}
+    for name, df in tables.items():
+        df.write.parquet(str(tmp_path / name))
+        t[name] = spark.read.parquet(str(tmp_path / name))
+    dim0, hstr0 = _prior(wide)
+    out = run_customer_pipeline(
+        t, dwd_customer=dim0, dwd_hstr_customer=hstr0, now=F.lit(NOW)
+    )
+    for k in ("dim", "history"):
+        p = _explain(out[k])
+        assert "stg_dce_" not in p, (k, p)
+        assert "Scan ExistingRDD" in p, (k, p)
+    p = _explain(out["history"])
+    assert "LeftAnti" not in p, p
+    close_joins = [
+        l for l in p.splitlines() if l.strip().startswith("Right keys") and "__ck" in l
+    ]
+    assert len(close_joins) == 1, p
